@@ -92,10 +92,14 @@ object CoordinateDescent {
       * add chain (`CoordinateDataScores.+`) degenerates to scoring in
       * place and summing columns — zero uid-keyed shuffle joins instead
       * of N−1, and the sum is the same left-associated order over the
-      * same values the old chain produced, so scores are bit-identical. */
+      * same values the old chain produced, so scores are bit-identical.
+      *
+      * Reserved columns: each coordinate scores into `_gms_<i>`, so
+      * `data` must not already carry a column with that prefix. */
     def score(data: DataFrame): DataFrame = {
       val parts = coordinates.values.toSeq.zipWithIndex
         .map { case (c, i) => (c, s"_gms_$i") }
+      requireFree(data, parts.map(_._2))
       val scored = parts.foldLeft(data) { case (df, (c, out)) =>
         scoreInPlace(c, df, out) }
       scored.select(col("uid"),
@@ -106,7 +110,16 @@ object CoordinateDescent {
   /** Score one trained coordinate INTO a column of `df` (all other
     * columns preserved): the fixed kernel is a broadcast-model
     * projection, the random kernel the reId-keyed model attach — the
-    * only join score computation fundamentally needs. */
+    * only join score computation fundamentally needs.
+    *
+    * A checkpointed model frame is attached by broadcast when its
+    * materialized blocks fit the session's autoBroadcastJoinThreshold.
+    * Catalyst cannot make that call itself: a checkpoint's LogicalRDD
+    * inherits size estimates that compound with every pass (a 290 KB
+    * model frame reads ~10⁴⁶ bytes after one pass), so without the
+    * hint every rescore shuffles the full-width frame to attach a
+    * model-sized table. A threshold of -1, or a frame that is not
+    * checkpointed, keeps the planner's own choice. */
   private[ml] def scoreInPlace(c: TrainedCoordinate, df: DataFrame,
                                outCol: String): DataFrame = c match {
     case TrainedFixed(spec, model) =>
@@ -114,12 +127,37 @@ object CoordinateDescent {
     case TrainedRandom(spec, models) =>
       val spark = df.sparkSession
       import spark.implicits._
-      RandomEffect.score(df, models.as[RandomEffect.ReModel],
+      val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+      val attach =
+        if (threshold >= 0 && checkpointBytes(models).exists(_ <= threshold))
+          broadcast(models)
+        else models
+      RandomEffect.score(df, attach.as[RandomEffect.ReModel],
         spec.reIdCol, spec.featuresCol, outCol)
+  }
+
+  /** Bytes a checkpointed frame holds in the block manager, if every
+    * partition is materialized. */
+  private def checkpointBytes(df: DataFrame): Option[Long] =
+    df.queryExecution.logical match {
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        df.sparkSession.sparkContext.getRDDStorageInfo
+          .find(i => i.id == l.rdd.id &&
+            i.numCachedPartitions == i.numPartitions)
+          .map(i => i.memSize + i.diskSize)
+      case _ => None
+    }
+
+  private def requireFree(data: DataFrame, reserved: Seq[String]): Unit = {
+    val taken = reserved.filter(data.columns.contains)
+    require(taken.isEmpty,
+      s"input already has reserved column(s) ${taken.mkString(", ")}")
   }
 
   /** `data` columns: uid (long), label, weight, offset, one VectorUDT
     * column per feature shard, one string column per random-effect id.
+    * Reserved: for each coordinate id the loop adds `_score_<id>`, so
+    * `data` must not already carry a column with that name.
     *
     * `initial` seeds the trained-coordinate map (incremental/partial
     * retraining, GameEstimator.scala:777-798): random-effect coordinates
@@ -135,6 +173,11 @@ object CoordinateDescent {
     require(lockedCoordinates.forall(id =>
       initial.exists(_.coordinates.contains(id))),
       "locked coordinates must exist in the initial model")
+    require(lockedCoordinates.forall(id => coords.exists(_.id == id)),
+      "locked coordinates must be in coords")
+    val scoreColOf: Map[String, String] =
+      coords.map(c => c.id -> s"_score_${c.id}").toMap
+    requireFree(data, scoreColOf.values.toSeq)
     val cached = data.persist(StorageLevel.MEMORY_AND_DISK)
 
     // Row-count-keyed execution profile for the descent loop
@@ -180,8 +223,6 @@ object CoordinateDescent {
     // now associate in first-scored column order instead of the old
     // incremental add/subtract chain; both are deterministic, and every
     // consumer gate rounds far above the ulp-level difference.
-    val scoreColOf: Map[String, String] =
-      coords.map(c => c.id -> s"_score_${c.id}").toMap
     var frame: DataFrame = cached
     var scoredIds: Seq[String] = Seq.empty
     var trained: Map[String, TrainedCoordinate] =
@@ -265,7 +306,13 @@ object CoordinateDescent {
           // excluded here are "passive": they are still scored below —
           // the rescore runs over the full frame.
           val capped =
-            if (r.activeCap > 0)
+            if (r.activeCap > 0 && nRows <= r.activeCap &&
+                r.activeLowerBound <= 1)
+              // no group can exceed the cap, so boundedSample would keep
+              // every row with a non-null entity at weight_scale 1: skip
+              // its aggregate and full-frame threshold join
+              withResidual.filter(col(r.reIdCol).isNotNull)
+            else if (r.activeCap > 0)
               graft.operators.GroupedSampling
                 .boundedSample(withResidual, Seq(r.reIdCol), Seq("uid"),
                   r.activeCap, warnOnTrim = true,

@@ -150,9 +150,8 @@ object Glm {
         }
         Some(toOriginal(v))
       case "full" =>
-        import breeze.linalg.{cholesky, DenseMatrix}
-        val flat = obj.hessianMatrix(w)
-        val h = new DenseMatrix[Double](dim, dim, flat) // symmetric: t irrelevant
+        import graft.ml.tuning.GpMath
+        val h = obj.hessianMatrix(w) // symmetric: layout irrelevant
         // raw-feature Hessian → normalized space: scale rows+cols by f
         cfg.norm.factors.foreach { f =>
           var i = 0
@@ -161,23 +160,21 @@ object Glm {
             while (j < dim) {
               val fi = if (i < f.length) f(i) else 1.0
               val fj = if (j < f.length) f(j) else 1.0
-              h(i, j) *= fi * fj
+              h(i + j * dim) *= fi * fj
               j += 1
             }
             i += 1
           }
         }
         var i = 0
-        while (i < dim) { h(i, i) += regDiag(i) + 1e-12; i += 1 }
-        val l = cholesky(h)
+        while (i < dim) { h(i + i * dim) += regDiag(i) + 1e-12; i += 1 }
+        val l = GpMath.cholesky(h, dim)
         // diag(H⁻¹) columnwise: solve H·eᵢ via the factor
         val v = new Array[Double](dim)
         i = 0
         while (i < dim) {
           val e = new Array[Double](dim); e(i) = 1.0
-          val z = graft.ml.tuning.GpMath.cholSolve(l,
-            breeze.linalg.DenseVector(e))
-          v(i) = z(i)
+          v(i) = GpMath.cholSolve(l, dim, e)(i)
           i += 1
         }
         Some(toOriginal(v))

@@ -87,17 +87,16 @@ object Optimizers {
     * (e.g. collinear features with l2 = 0); callers fall back to LBFGS. */
   def normalSolve(a: Array[Double], b: Array[Double], dim: Int,
                   reg: QuadReg): Array[Double] = {
-    import breeze.linalg.{cholesky, DenseMatrix, DenseVector}
-    val h = new DenseMatrix[Double](dim, dim, a.clone())
+    import graft.ml.tuning.GpMath
+    val h = a.clone()
     val rhs = new Array[Double](dim)
     var i = 0
     while (i < dim) {
-      h(i, i) += reg.weight(i)
+      h(i + i * dim) += reg.weight(i)
       rhs(i) = b(i) + reg.weight(i) * reg.center(i)
       i += 1
     }
-    val l = cholesky(h)
-    graft.ml.tuning.GpMath.cholSolve(l, DenseVector(rhs)).data
+    GpMath.cholSolve(GpMath.cholesky(h, dim), dim, rhs)
   }
 
   /** Wrap an oracle as a breeze DiffFunction with the quadratic

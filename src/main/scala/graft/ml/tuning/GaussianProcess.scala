@@ -1,6 +1,6 @@
 package graft.ml.tuning
 
-import breeze.linalg.{DenseMatrix, DenseVector, cholesky}
+import breeze.linalg.{DenseMatrix, DenseVector}
 
 /** Fitted GP posterior over observed (x, y) with a fixed kernel
   * (reference GaussianProcessModel.scala:34-120). Predictions are the
@@ -9,15 +9,16 @@ import breeze.linalg.{DenseMatrix, DenseVector, cholesky}
   */
 class GpModel(kernel: Kernel, x: DenseMatrix[Double], yMean: Double,
               y: DenseVector[Double]) {
-  private val l = cholesky(kernel.gram(x))
-  private val alpha = GpMath.cholSolve(l, y - yMean)
+  private val n = x.rows
+  private val l = GpMath.cholesky(kernel.gram(x).toArray, n)
+  private val alpha = DenseVector(GpMath.cholSolve(l, n, (y - yMean).toArray))
 
   /** (mean, variance) at one point. */
   def predict(xs: DenseVector[Double]): (Double, Double) = {
     val xm = xs.toDenseMatrix
     val kStar = kernel.cov(x, xm).toDenseVector
     val mean = yMean + (kStar dot alpha)
-    val v = GpMath.forwardSolve(l, kStar)
+    val v = DenseVector(GpMath.forwardSolve(l, n, kStar.toArray))
     val varPrior = kernel.cov(xm, xm)(0, 0)
     (mean, math.max(1e-12, varPrior - (v dot v)))
   }
@@ -47,7 +48,7 @@ class GpEstimator(base: Kernel = Matern52(), nSamples: Int = 3,
         math.exp(theta(2)))
       try k.logMarginalLikelihood(x, yc) -
         0.01 * (theta dot theta) // weak log-normal prior regularization
-      catch { case _: breeze.linalg.NotConvergedException |
+      catch { case _: ArithmeticException |
                    _: IllegalArgumentException => -1e30 }
     }
 

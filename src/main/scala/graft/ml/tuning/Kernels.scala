@@ -1,13 +1,14 @@
 package graft.ml.tuning
 
-import breeze.linalg.{DenseMatrix, DenseVector, cholesky}
+import breeze.linalg.{DenseMatrix, DenseVector}
 
 /** Stationary covariance kernels for the Gaussian-process surrogate
   * (reference photon-lib/.../hyperparameter/estimators/kernels/
   * StationaryKernel.scala:35-, RBF.scala, Matern52.scala).
   *
-  * All matrix math is driver-side breeze over at most a few hundred
-  * observations — hyperparameter tuning observes one point per full
+  * All matrix math is driver-side (breeze vectors, the [[GpMath]]
+  * Cholesky) over at most a few hundred observations —
+  * hyperparameter tuning observes one point per full
   * distributed training run, so the GP itself is intentionally tiny.
   */
 sealed trait Kernel {
@@ -54,12 +55,13 @@ sealed trait Kernel {
     * (StationaryKernel.logLikelihood, StationaryKernel.scala:106-129). */
   def logMarginalLikelihood(x: DenseMatrix[Double],
                             y: DenseVector[Double]): Double = {
-    val l = cholesky(gram(x))
-    val alpha = GpMath.cholSolve(l, y)
+    val n = x.rows
+    val l = GpMath.cholesky(gram(x).toArray, n)
+    val alpha = DenseVector(GpMath.cholSolve(l, n, y.toArray))
     var logDet = 0.0
     var i = 0
-    while (i < l.rows) { logDet += math.log(l(i, i)); i += 1 }
-    -0.5 * (y dot alpha) - logDet - 0.5 * x.rows * math.log(2 * math.Pi)
+    while (i < n) { logDet += math.log(l(i + i * n)); i += 1 }
+    -0.5 * (y dot alpha) - logDet - 0.5 * n * math.log(2 * math.Pi)
   }
 }
 
@@ -83,41 +85,68 @@ case class Matern52(amplitude: Double = 1.0, noise: Double = 1e-4,
 }
 
 private[ml] object GpMath {
-  /** Solve K·z = y given L = chol(K) (lower): forward then back subst. */
-  def cholSolve(l: DenseMatrix[Double],
-                y: DenseVector[Double]): DenseVector[Double] = {
-    val n = l.rows
-    val z = y.copy
+  /** Lower Cholesky factor L (L·Lᵀ = A) of the symmetric n×n matrix `a`,
+    * both column-major; only A's lower triangle is read. Column by
+    * column in the operation order of LAPACK's unblocked dpotf2 (the
+    * pivot's dot product summed first, the column scaled by the
+    * pivot's reciprocal), so a system at the edge of singularity is
+    * accepted or rejected as LAPACK would. Plain JVM arithmetic on
+    * purpose: breeze's `cholesky` goes through netlib LAPACK, whose
+    * first call in a JVM costs seconds when it falls back to F2J — more
+    * than every normal-equations solve of a GAME run together. Throws
+    * when A is not positive definite (a pivot ≤ 0 or NaN). */
+  def cholesky(a: Array[Double], n: Int): Array[Double] = {
+    val l = new Array[Double](n * n)
+    var j = 0
+    while (j < n) {
+      var dot = 0.0
+      var k = 0
+      while (k < j) { val v = l(j + k * n); dot += v * v; k += 1 }
+      val d = a(j + j * n) - dot
+      if (!(d > 0)) throw new ArithmeticException(
+        s"matrix is not positive definite (pivot $j of $n)")
+      val ljj = math.sqrt(d)
+      l(j + j * n) = ljj
+      val r = 1.0 / ljj
+      var i = j + 1
+      while (i < n) {
+        var s = a(i + j * n)
+        k = 0
+        while (k < j) { s += -l(j + k * n) * l(i + k * n); k += 1 }
+        l(i + j * n) = s * r
+        i += 1
+      }
+      j += 1
+    }
+    l
+  }
+
+  /** Forward substitution L·z = y, L an n×n factor from [[cholesky]]. */
+  def forwardSolve(l: Array[Double], n: Int, y: Array[Double])
+  : Array[Double] = {
+    val z = y.clone()
     var i = 0
-    while (i < n) { // L·u = y
+    while (i < n) {
       var s = z(i)
       var j = 0
-      while (j < i) { s -= l(i, j) * z(j); j += 1 }
-      z(i) = s / l(i, i)
+      while (j < i) { s -= l(i + j * n) * z(j); j += 1 }
+      z(i) = s / l(i + i * n)
       i += 1
-    }
-    i = n - 1
-    while (i >= 0) { // Lᵀ·z = u
-      var s = z(i)
-      var j = i + 1
-      while (j < n) { s -= l(j, i) * z(j); j += 1 }
-      z(i) = s / l(i, i)
-      i -= 1
     }
     z
   }
 
-  /** Forward substitution L·z = y. */
-  def forwardSolve(l: DenseMatrix[Double],
-                   y: DenseVector[Double]): DenseVector[Double] = {
-    val z = y.copy
-    var i = 0
-    while (i < l.rows) {
+  /** Solve K·z = y given L = chol(K): forward then back substitution. */
+  def cholSolve(l: Array[Double], n: Int, y: Array[Double])
+  : Array[Double] = {
+    val z = forwardSolve(l, n, y)
+    var i = n - 1
+    while (i >= 0) { // Lᵀ·z = u
       var s = z(i)
-      var j = 0
-      while (j < i) { s -= l(i, j) * z(j); j += 1 }
-      z(i) = s / l(i, i)
-      i += 1
+      var j = i + 1
+      while (j < n) { s -= l(j + i * n) * z(j); j += 1 }
+      z(i) = s / l(i + i * n)
+      i -= 1
     }
     z
   }

@@ -315,6 +315,114 @@ class GameSpec extends SparkSpec {
       .models.count() == 0)
   }
 
+  test("capped descent equals boundedSample by hand; an unreachable cap equals no cap") {
+    import graft.operators.GroupedSampling
+    val data = gameData(2000)
+    val random = RandomSpec("perUser", "userId", "emptyFeatures", 0,
+      GlmConfig(SquaredLoss, l2 = 1e-2, maxIter = 20, tol = 1e-9),
+      activeCap = 20, activeLowerBound = 30)
+    def models(m: GameModel) = m.coordinates("perUser")
+      .asInstanceOf[TrainedRandom].models.as[RandomEffect.ReModel]
+      .collect().map(r => r.reId -> r.intercept).toMap
+    GroupedSampling.resetTrimWarning()
+    val got = models(CoordinateDescent.train(data, Seq(random),
+      nIterations = 1))
+    // ~100 rows/user against a cap of 20: the trim warning must fire
+    assert(GroupedSampling.trimWarningFired)
+    val byHand = GroupedSampling.boundedSample(data, Seq("userId"),
+        Seq("uid"), 20)
+      .join(data.groupBy("userId").count().filter(col("count") >= 30),
+        Seq("userId"), "left_semi")
+      .select(col("userId").as("reId"), col("label"),
+        col("emptyFeatures").as("features"), col("offset"),
+        (col("weight") * col("weight_scale")).as("weight"))
+      .as[RandomEffect.ReSample]
+    val want = RandomEffect.train(byHand, 0, random.cfg).collect()
+      .map(r => r.reId -> r.intercept).toMap
+    assert(got.keySet == want.keySet && got.size == nUsers)
+    got.foreach { case (u, b) =>
+      assert(math.abs(b - want(u)) < 1e-12, s"$u: cd=$b by hand=${want(u)}")
+    }
+
+    // a cap no group can reach skips the sampling: same models as no cap
+    val fixed = FixedSpec("global", "fixedFeatures", 2,
+      GlmConfig(SquaredLoss, l2 = 1e-6, maxIter = 50, tol = 1e-9))
+    def run(cap: Int) = CoordinateDescent.train(data,
+      Seq(fixed, random.copy(activeCap = cap, activeLowerBound = 0)),
+      nIterations = 2)
+    val loose = run(2000)
+    val none = run(0)
+    val (a, b) = (models(loose), models(none))
+    assert(a.keySet == b.keySet)
+    a.foreach { case (u, x) => assert(math.abs(x - b(u)) < 1e-12, u) }
+    val fa = loose.coordinates("global").asInstanceOf[TrainedFixed].model
+    val fb = none.coordinates("global").asInstanceOf[TrainedFixed].model
+    (fa.coef :+ fa.intercept).zip(fb.coef :+ fb.intercept).foreach {
+      case (x, y) => assert(math.abs(x - y) < 1e-12, s"$x vs $y") }
+  }
+
+  test("rescoring attaches a small checkpointed model frame by broadcast") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val data = gameData(400, seed = 12)
+    val random = RandomSpec("perUser", "userId", "emptyFeatures", 0,
+      GlmConfig(SquaredLoss, l2 = 1e-2, maxIter = 20, tol = 1e-9))
+    val trained = CoordinateDescent.train(data, Seq(random),
+      nIterations = 2).coordinates("perUser")
+    def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
+      case q: QueryStageExec => flatten(q.plan)
+      case other => other.children.flatMap(flatten)
+    })
+    def scoreWith(threshold: String) = {
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val saved = spark.conf.getOption(key)
+      spark.conf.set(key, threshold)
+      try {
+        val df = scoreInPlace(trained, data, "s")
+        val rows = df.select("uid", "s").collect()
+          .map(r => r.getLong(0) -> r.getDouble(1)).sortBy(_._1).toSeq
+        (rows, flatten(df.queryExecution.executedPlan))
+      } finally saved match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+    val (bRows, bPlan) = scoreWith("10MB")
+    assert(bPlan.exists(_.isInstanceOf[BroadcastHashJoinExec]),
+      bPlan.map(_.nodeName).distinct.mkString(", "))
+    assert(!bPlan.exists(_.isInstanceOf[ShuffleExchangeLike]),
+      bPlan.map(_.nodeName).distinct.mkString(", "))
+    val (sRows, sPlan) = scoreWith("-1")
+    assert(!sPlan.exists(_.isInstanceOf[BroadcastHashJoinExec]))
+    assert(sPlan.exists(_.isInstanceOf[ShuffleExchangeLike]))
+    assert(bRows == sRows && bRows.size == 400)
+  }
+
+  test("reserved columns and locked coordinates fail fast") {
+    val data = gameData(100)
+    val fixed = FixedSpec("global", "fixedFeatures", 2,
+      GlmConfig(SquaredLoss, l2 = 1e-6, maxIter = 20, tol = 1e-9))
+    val random = RandomSpec("perUser", "userId", "emptyFeatures", 0,
+      GlmConfig(SquaredLoss, l2 = 1e-2, maxIter = 20, tol = 1e-9))
+    Seq("_score_global", "_score_perUser").foreach { c =>
+      val e = intercept[IllegalArgumentException](CoordinateDescent.train(
+        data.withColumn(c, lit(0.0)), Seq(fixed, random), nIterations = 1))
+      assert(e.getMessage.contains(c))
+    }
+    val model = CoordinateDescent.train(data, Seq(fixed), nIterations = 1)
+    val e = intercept[IllegalArgumentException](
+      model.score(data.withColumn("_gms_0", lit(0.0))))
+    assert(e.getMessage.contains("_gms_0"))
+    // a locked coordinate must be one of the coordinates descended over
+    val locked = intercept[IllegalArgumentException](CoordinateDescent.train(
+      data, Seq(random), nIterations = 1, initial = Some(model),
+      lockedCoordinates = Set("global")))
+    assert(locked.getMessage.contains("coords"))
+  }
+
   test("per-entity variances persist and priors regularize, not just warm-start") {
     val rnd = new scala.util.Random(41)
     def batch(n: Int, effect: Double) = (0 until n).map { _ =>

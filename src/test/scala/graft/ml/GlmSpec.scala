@@ -170,6 +170,41 @@ class GlmSpec extends SparkSpec {
       s"coef=${m.coef.toSeq}")
   }
 
+  test("normal-equations Cholesky matches breeze, rejects singular systems") {
+    import breeze.linalg.{cholesky, DenseMatrix, DenseVector}
+    import graft.ml.tuning.GpMath
+    val rnd = new scala.util.Random(5)
+    Seq(1, 2, 33, 200).foreach { n =>
+      // SPD: GᵀG + n·I
+      val g = DenseMatrix.fill(n, n)(rnd.nextGaussian())
+      val a = g.t * g + DenseMatrix.eye[Double](n) * n.toDouble
+      val y = DenseVector.fill(n)(rnd.nextGaussian())
+      val lb = cholesky(a)
+      val l = GpMath.cholesky(a.toArray, n)
+      val lScale = lb.toArray.map(math.abs).max
+      l.zip(lb.toArray).foreach { case (x, w) =>
+        assert(math.abs(x - w) <= 1e-10 * lScale, s"n=$n factor: $x vs $w")
+      }
+      val want = lb.t \ (lb \ y)
+      val got = GpMath.cholSolve(l, n, y.toArray)
+      val scale = want.toArray.map(math.abs).max
+      got.zip(want.toArray).foreach { case (x, w) =>
+        assert(math.abs(x - w) <= 1e-10 * scale, s"n=$n: $x vs $w")
+      }
+    }
+    // the same collinear system as the fallback test below: the exact
+    // solve must throw so Glm.train falls back to LBFGS
+    val pts = (1 to 300).map { i =>
+      val x = i / 100.0
+      LabeledPoint(3.0 * x, Vectors.dense(x, 2 * x))
+    }
+    val cfg = GlmConfig(SquaredLoss, l2 = 0.0)
+    val (aM, bV) = new LocalGlmObjective(pts.toArray, 2, cfg)
+      .normalEquations()
+    intercept[ArithmeticException](Optimizers.normalSolve(aM, bV, 3,
+      Optimizers.QuadReg.from(cfg, 3, 2)))
+  }
+
   test("OWLQN drives small true-zero coefficients to exactly zero") {
     val data = synthetic(3000, Array(1.5, 0.0, 0.0, -1.0), 0.0,
       logistic = true)
