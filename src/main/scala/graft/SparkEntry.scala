@@ -2,6 +2,8 @@ package graft
 
 import graft.functions.{TextFunctions => TF, VectorOps => V}
 import graft.operators._
+import graft.util.{Parallel, TempDirs}
+import graft.util.ExecProfile.{FixtureConfs, withConfs}
 import graft.util.Exact._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -30,67 +32,10 @@ object SparkEntry {
   private def revenueDec: Column =
     dec(col("l_extendedprice"), 12, 4) * dec(lit(1) - col("l_discount"), 12, 4)
 
-  /** Run a FIXTURE-SCALE lifecycle gate with AQE off and a narrow
-    * shuffle width, restoring the session settings after. These gates
-    * measure persisted-index state machines on few-row planted
-    * corpora, where wall time is pure Spark scheduling floor: AQE
-    * turns every exchange of every probe/health/compact plan into its
-    * own stage-job (q254 ran 295 jobs on a 4-row fixture — 60-90 ms
-    * of scheduler latency each), buying nothing because there is no
-    * data to re-plan around. Semantics are unchanged (AQE is an
-    * execution strategy), so the gate's rows stay hash-identical; the
-    * production-scale probes keep AQE — this wraps only the gates
-    * whose data is constant-size by construction. */
-  /** Run independent per-index actions of a lifecycle gate
-    * CONCURRENTLY (one thread per action, bounded by the caller's
-    * list): each action drives its own index dir under its own writer
-    * lock, so builds/deletes/compacts across families are exactly the
-    * fleet-parallel operations a production maintenance loop runs —
-    * and at fixture scale each action is scheduler-latency-bound, so
-    * overlapping them collapses the gate's wall time without changing
-    * any result. Rethrows the first failure. */
-  private def inParallel(fs: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(
-      Future.sequence(fs.map(f => Future(f()))), 10.minutes): Unit
-  }
-
-  private def fixtureTuned[A](s: SparkSession)(body: => A): A = {
-    val aqe = s.conf.get("spark.sql.adaptive.enabled", "true")
-    val parts = s.conf.get("spark.sql.shuffle.partitions", "200")
-    val wsc = s.conf.get("spark.sql.codegen.wholeStage", "true")
-    val cgf = s.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    val abt = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    // constructed-fixture gates run dozens of DISTINCT lifecycle plans
-    // over ≤ ~20-row planted states: janino-compiling kilobytes of
-    // whole-stage Java per plan costs far more than interpreting the
-    // handful of rows ever saves (q258 warm job-time sum 9-14 s with
-    // codegen vs 5.2 s interpreted). Scale-honest because these gates'
-    // inputs are constant-size BY CONSTRUCTION (decades flat) — the
-    // data-bearing queries keep codegen on.
-    s.conf.set("spark.sql.codegen.wholeStage", "false")
-    s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    // every BroadcastExchange materializes through its OWN job — at
-    // fixture scale a single lifecycle action's plan carries dozens of
-    // auto-broadcast tiny sides, so the gate's cost is ~one scheduler
-    // round-trip per broadcast (q262: ~28 jobs per 5-doc admission
-    // batch). 4-partition shuffle joins fold the same tiny joins into
-    // the action's one job. Explicit broadcast() hints (load-bearing
-    // at scale) are unaffected; join STRATEGY never changes rows.
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try body
-    finally {
-      s.conf.set("spark.sql.adaptive.enabled", aqe)
-      s.conf.set("spark.sql.shuffle.partitions", parts)
-      s.conf.set("spark.sql.codegen.wholeStage", wsc)
-      s.conf.set("spark.sql.codegen.factoryMode", cgf)
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", abt)
-    }
-  }
+  /** Shuffle width the streaming gates (q92, q133, q209) start their
+    * stateful query under: the state-store count is frozen from it at
+    * start, and their key sets need 8 stores, not the session's width. */
+  private val StateStoreWidth = Seq("spark.sql.shuffle.partitions" -> "8")
 
   // ------------------------------------------------------- relational (§2.3/2.4)
 
@@ -1377,14 +1322,10 @@ object SparkEntry {
     // at query start; 150 user keys do not need 32 state stores, and
     // per-batch overhead scales with store count (each micro-batch
     // opens/commits every store) — size it to the key cardinality scale
-    val spKey = "spark.sql.shuffle.partitions"
-    val spSaved = s.conf.get(spKey)
-    val q =
-      try {
-        s.conf.set(spKey, "8")
-        sessions.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-      } finally s.conf.set(spKey, spSaved)
+    val q = withConfs(s, StateStoreWidth) {
+      sessions.writeStream.outputMode("append")
+        .format("memory").queryName(sink).start()
+    }
     try {
       // two mid-stream barriers: enough for the watermark to advance
       // across micro-batches (incremental flushing is exercised), few
@@ -1432,14 +1373,10 @@ object SparkEntry {
       watermark = "1 hour")
     val sink = "q133_dedup_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    val spKey = "spark.sql.shuffle.partitions"
-    val spSaved = s.conf.get(spKey)
-    val q =
-      try {
-        s.conf.set(spKey, "8")
-        deduped.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-      } finally s.conf.set(spKey, spSaved)
+    val q = withConfs(s, StateStoreWidth) {
+      deduped.writeStream.outputMode("append")
+        .format("memory").queryName(sink).start()
+    }
     try {
       val chunk = math.max(1, (docs.length + 3) / 4)
       docs.grouped(chunk).foreach { c =>
@@ -1461,18 +1398,17 @@ object SparkEntry {
     * so the hash compare is batch-equivalent regardless of batch
     * slicing. */
   def q209_streaming_file(s: SparkSession, d: String): DataFrame = {
-    val stage = graft.util.TempDirs.fresh("q209_stage_")
     // the staging dir must not leak on ANY failure (the write itself,
     // readStream setup, or start()), not just a mid-stream one — so the
-    // cleanup wraps everything from the first write onward
-    try {
+    // scope wraps everything from the first write onward
+    TempDirs.scoped("q209_stage_") { case Seq(stage) =>
       val ev = T.events(s, d)
         .select(col("ts"), col("event_type"), col("value"))
-      ev.repartition(8).write.parquet(stage.getAbsolutePath)
+      ev.repartition(8).write.parquet(stage)
       val stream = s.readStream
         .schema(org.apache.spark.sql.types.StructType(ev.schema.fields))
         .option("maxFilesPerTrigger", "2")
-        .parquet(stage.getAbsolutePath)
+        .parquet(stage)
       val agg = stream
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "6 hours"), col("event_type"))
@@ -1482,14 +1418,10 @@ object SparkEntry {
         java.util.UUID.randomUUID().toString.replace("-", "")
       // same state-store sizing rationale as q92: freeze a key-scale
       // partition count for the stateful agg
-      val spKey = "spark.sql.shuffle.partitions"
-      val spSaved = s.conf.get(spKey)
-      val q =
-        try {
-          s.conf.set(spKey, "8")
-          agg.writeStream.outputMode("complete")
-            .format("memory").queryName(sink).start()
-        } finally s.conf.set(spKey, spSaved)
+      val q = withConfs(s, StateStoreWidth) {
+        agg.writeStream.outputMode("complete")
+          .format("memory").queryName(sink).start()
+      }
       try q.processAllAvailable()
       finally q.stop()
       val out = s.table(sink).select(
@@ -1503,7 +1435,7 @@ object SparkEntry {
       s.catalog.dropTempView(sink)
       s.createDataFrame(
         java.util.Arrays.asList(rows: _*), out.schema)
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** Int8 embedding quantization manifest: per-vector symmetric scale +
@@ -1632,9 +1564,7 @@ object SparkEntry {
     val emb = T.embeddings(s, d)
     val base = emb.filter(col("vec_id") % 10 < 8)
     val batch = emb.filter(col("vec_id") % 10 >= 8)
-    val stage = graft.util.TempDirs.fresh("q237_sem_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.scoped("q237_sem_") { case Seq(root) =>
       val (labels, centroids) = operators.Clustering.kmeansWithCentroids(
         base, "vec_id", "embedding", k = 16, iterations = 2)
       operators.Clustering.semDedupStateSave(s, root, labels, "vec_id",
@@ -1643,7 +1573,7 @@ object SparkEntry {
       operators.Clustering.semDedupIncrementalPersisted(s, root, base,
         batch, "vec_id", "embedding", tau = 0.3)
         .localCheckpoint()
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** Incremental SemDeDup at the SCALE clustering
@@ -2488,13 +2418,12 @@ object SparkEntry {
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val corpus = emb.filter(col("vec_id") >= 5)
       .select(col("vec_id").as("id"), col("embedding").as("v"))
-    val dir = graft.util.TempDirs.fresh(prefix)
-    try {
-      val got = run(queries, corpus, dir.getAbsolutePath)
+    TempDirs.scoped(prefix) { case Seq(dir) =>
+      val got = run(queries, corpus, dir)
         .select(col("qid"), col("rank"), col("id"), col("cosine"))
       val rows = got.collect()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), got.schema)
-    } finally graft.util.TempDirs.deleteRecursively(dir)
+    }
   }
 
   /** IVF index PERSISTENCE gate ([[operators.Similarity.ivfBuild]] /
@@ -2619,16 +2548,15 @@ object SparkEntry {
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val corpus = emb.filter(col("vec_id") >= 5)
       .select(col("vec_id").as("id"), col("embedding").as("v"))
-    val dir = graft.util.TempDirs.fresh("q220_health_")
-    try {
-      Similarity.ivfBuild(corpus, dir.getAbsolutePath, nList = 8,
+    TempDirs.scoped("q220_health_") { case Seq(dir) =>
+      Similarity.ivfBuild(corpus, dir, nList = 8,
         kmeansMaxIter = 2)
-      val got = Similarity.ivfIndexHealth(s, dir.getAbsolutePath, queries,
+      val got = Similarity.ivfIndexHealth(s, dir, queries,
         k = 3, nProbe = 8)
         .select(col("n_lists"), col("total_rows"), col("recall_at_k"))
       val rows = got.collect()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), got.schema)
-    } finally graft.util.TempDirs.deleteRecursively(dir)
+    }
   }
 
   /** [[q220_index_health]] for the COMPRESSED layout
@@ -2644,17 +2572,16 @@ object SparkEntry {
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val corpus = emb.filter(col("vec_id") >= 5)
       .select(col("vec_id").as("id"), col("embedding").as("v"))
-    val dir = graft.util.TempDirs.fresh("q230_health_")
-    try {
-      Similarity.ivfPqBuild(corpus, dir.getAbsolutePath, nList = 8,
+    TempDirs.scoped("q230_health_") { case Seq(dir) =>
+      Similarity.ivfPqBuild(corpus, dir, nList = 8,
         m = 4, nCodes = 8, kmeansMaxIter = 2)
-      val got = Similarity.ivfPqIndexHealth(s, dir.getAbsolutePath,
+      val got = Similarity.ivfPqIndexHealth(s, dir,
         queries, corpus, k = 3, nProbe = 8,
         refineK = corpus.count().toInt)
         .select(col("n_lists"), col("total_rows"), col("recall_at_k"))
       val rows = got.collect()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), got.schema)
-    } finally graft.util.TempDirs.deleteRecursively(dir)
+    }
   }
 
   /** Maintenance plan→apply gate ([[operators.Similarity
@@ -2675,9 +2602,7 @@ object SparkEntry {
       .select(col("vec_id").as("id"), col("embedding").as("v"))
     val mid = corpus.agg(
       percentile_approx(col("id"), lit(0.5), lit(10000))).head().getLong(0)
-    val dir = graft.util.TempDirs.fresh("q229_maint_")
-    try {
-      val root = dir.getAbsolutePath
+    TempDirs.scoped("q229_maint_") { case Seq(root) =>
       Similarity.ivfBuild(corpus.filter(col("id") <= mid), root,
         nList = 8, kmeansMaxIter = 2)
       Similarity.ivfAppend(s, root, corpus.filter(col("id") > mid))
@@ -2694,7 +2619,7 @@ object SparkEntry {
         before.getAs[String]("action"), after.getAs[String]("action")))
         .toDF("n_lists", "total_rows", "action_fragmented",
           "action_compacted")
-    } finally graft.util.TempDirs.deleteRecursively(dir)
+    }
   }
 
   /** Streaming index-INGEST gate ([[operators.Similarity.ivfIngest]]):
@@ -2709,20 +2634,19 @@ object SparkEntry {
         percentile_approx(col("id"), lit(0.5), lit(10000))).head().getLong(0)
       Similarity.ivfBuild(corpus.filter(col("id") <= mid), dir,
         nList = 8, kmeansMaxIter = 2)
-      val stage = graft.util.TempDirs.fresh("q221_stage_")
-      try {
+      TempDirs.scoped("q221_stage_") { case Seq(stage) =>
         // two staged files = two micro-batches: enough to exercise the
         // multi-batch append path without doubling the gate's job count
         val delta = corpus.filter(col("id") > mid)
-        val files = stage.getAbsolutePath + "/files"
+        val files = stage + "/files"
         delta.repartition(2).write.parquet(files)
         val stream = s.readStream.schema(delta.schema)
           .option("maxFilesPerTrigger", "1").parquet(files)
         val q = Similarity.ivfIngest(stream, dir,
-          stage.getAbsolutePath + "/ckpt")
+          stage + "/ckpt")
         try q.processAllAvailable()
         finally q.stop()
-      } finally graft.util.TempDirs.deleteRecursively(stage)
+      }
       Similarity.ivfQuery(s, dir, queries, k = 3, nProbe = 8)
     }
 
@@ -2741,18 +2665,17 @@ object SparkEntry {
       val mid = stats.getLong(0)
       Similarity.ivfPqBuild(corpus.filter(col("id") <= mid), dir,
         nList = 8, m = 4, nCodes = 8, kmeansMaxIter = 2)
-      val stage = graft.util.TempDirs.fresh("q227_stage_")
-      try {
+      TempDirs.scoped("q227_stage_") { case Seq(stage) =>
         val delta = corpus.filter(col("id") > mid)
-        val files = stage.getAbsolutePath + "/files"
+        val files = stage + "/files"
         delta.repartition(2).write.parquet(files)
         val stream = s.readStream.schema(delta.schema)
           .option("maxFilesPerTrigger", "1").parquet(files)
         val q = Similarity.ivfPqIngest(stream, dir,
-          stage.getAbsolutePath + "/ckpt")
+          stage + "/ckpt")
         try q.processAllAvailable()
         finally q.stop()
-      } finally graft.util.TempDirs.deleteRecursively(stage)
+      }
       Similarity.ivfPqQuery(s, dir, queries, corpus, k = 3, nProbe = 8,
         refineK = stats.getLong(1).toInt)
     }
@@ -2788,9 +2711,7 @@ object SparkEntry {
         lit(0.5) + lit(2.0) * col("x1") - col("x2") +
           u01(col("user"), 11) * 0.8 + u01(col("item"), 12) * 0.6 +
           u01(col("artist"), 13) * 0.4 + u01(col("id"), 99) * 0.05)
-    val stage = graft.util.TempDirs.fresh("q228_game_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.scoped("q228_game_") { case Seq(root) =>
       // ONE corpus scan writes both splits (partitioned write) — two
       // filtered writes would read the events table twice, a real 2×
       // at the 100 TB input this models
@@ -2822,7 +2743,7 @@ object SparkEntry {
         rmse < 0.25))
         .toDF("n_train", "n_valid", "n_users", "n_items", "n_artists",
           "rmse_ok")
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** q228's binary-classification twin (reference DriverTest.scala's
@@ -2855,9 +2776,7 @@ object SparkEntry {
           u01(col("user"), 11) * 1.2 + u01(col("item"), 12) * 0.9 +
           u01(col("artist"), 13) * 0.5 + u01(col("id"), 99) * 0.1 > 0)
           .cast("double"))
-    val stage = graft.util.TempDirs.fresh("q231_game_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.scoped("q231_game_") { case Seq(root) =>
       data.withColumn("_split",
         when(pmod(col("id"), lit(5L)) === 0, lit("valid"))
           .otherwise(lit("train")))
@@ -2886,7 +2805,7 @@ object SparkEntry {
         auc > 0.93))
         .toDF("n_train", "n_valid", "n_users", "n_items", "n_artists",
           "auc_ok")
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** Incremental (prior-seeded) retraining through the CLI surface
@@ -2909,9 +2828,7 @@ object SparkEntry {
       col("vec_id").cast("long").as("uid"),
       col("label").cast("double").as("y"),
       element_at(col("embedding"), 4).cast("double").as("x"))
-    val stage = graft.util.TempDirs.fresh("q232_incr_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.scoped("q232_incr_") { case Seq(root) =>
       pts.withColumn("_split",
         when(pmod(col("uid"), lit(2L)) === 0, lit("d1")).otherwise(lit("d2")))
         .write.partitionBy("_split").parquet(s"$root/data")
@@ -2933,7 +2850,7 @@ object SparkEntry {
       Seq((rnd6(g1.coef(0) + 1e-9), rnd6(g1.intercept + 1e-9),
         rnd6(g2.coef(0) + 1e-9), rnd6(g2.intercept + 1e-9)))
         .toDF("w1", "b1", "w2", "b2")
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** GAME SCORING lifecycle e2e (reference GameScoringDriver.scala:
@@ -2976,9 +2893,7 @@ object SparkEntry {
         RandomSpec("perUser", "user", "emptyFeatures", 0, cfg), users),
       "perItem" -> TrainedRandom(
         RandomSpec("perItem", "item", "emptyFeatures", 0, cfg), items)))
-    val stage = graft.util.TempDirs.fresh("q233_score_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.scoped("q233_score_") { case Seq(root) =>
       data.write.parquet(s"$root/data")
       graft.sources.ModelIO.saveGame(s, model, s"$root/model")
       val scores = graft.drivers.GameScoringDriver.run(s,
@@ -2994,8 +2909,68 @@ object SparkEntry {
       scores
         .select(col("uid"), round(col("score") + lit(1e-9), 6).as("score"))
         .localCheckpoint()
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
+
+  // ------------------------------------------ fleet lifecycle fixtures
+
+  /** Four pangram docs (ids 0-3): short distinct texts, the planted
+    * corpus of the fleet lifecycle gates. */
+  private val Pangrams: Seq[(Long, String)] = Seq(
+    0L -> "the quick brown fox jumps over the lazy dog",
+    1L -> "pack my box with five dozen liquor jugs",
+    2L -> "how vexingly quick daft zebras jump",
+    3L -> "sphinx of black quartz judge my vow")
+
+  /** One boilerplate line: eight copies funnel every MinHash band into
+    * ONE bucket of 8, over the gates' hot cap of 5. */
+  private val Boiler = "all work and no play makes jack a dull boy"
+
+  /** The unit vector along `dim` in `n` dims. */
+  private def oneHot(dim: Int, n: Int = 8): Array[Float] = {
+    val a = new Array[Float](n); a(dim) = 1.0f; a
+  }
+
+  /** [[oneHot]] as the `array<double>` embedding SemDeDup states take. */
+  private def axis(dim: Int, n: Int = 8): Seq[Double] =
+    oneHot(dim, n).map(_.toDouble).toSeq
+
+  /** The 2-d unit vector at `deg` degrees. */
+  private def ang(deg: Double): Array[Float] = Array(
+    math.cos(math.toRadians(deg)).toFloat,
+    math.sin(math.toRadians(deg)).toFloat)
+
+  /** Member of 4-d cluster `c`: direction e_c + 0.2·e_{c+1}, moved by
+    * `eps` along e_{c+2} (q234/q239's geometric IVF fixture). */
+  private def clusterMember(c: Int, eps: Double): Array[Float] = {
+    val a = new Array[Float](4)
+    a(c % 4) = 1.0f; a((c + 1) % 4) = 0.2f
+    a((c + 2) % 4) = eps.toFloat
+    a
+  }
+
+  /** Fit `k` frozen centroids over `vecs` (2 k-means iterations) and
+    * save them with their labels as the SemDeDup state at `dir`. */
+  private def semStateBuild(s: SparkSession, dir: String, vecs: DataFrame,
+                            idCol: String, vecCol: String, k: Int): Unit = {
+    val (labels, cents) = operators.Clustering
+      .kmeansWithCentroids(vecs, idCol, vecCol, k = k, iterations = 2)
+    operators.Clustering.semDedupStateSave(s, dir, labels, idCol, cents)
+    operators.Clustering.releasePairs(labels)
+  }
+
+  /** Builds of the persisted state the admission kernel
+    * ([[operators.CorpusPipeline.admitBatch]]) reads: `base`'s exact
+    * hashes and MinHash signatures, `bench`'s 3-gram decontam set. Each
+    * drives its own writer-lock domain, so callers run them through
+    * [[Parallel.fleetMap]]. */
+  private def admissionIndexBuilds(base: DataFrame, bench: DataFrame,
+                                   exDir: String, mhDir: String,
+                                   dcDir: String, idCol: String)
+    : Seq[() => Unit] = Seq(
+    () => Dedup.exactIndexBuild(base, exDir, idCol, "text"),
+    () => Dedup.minhashIndexBuild(base, mhDir, idCol, "text"),
+    () => Decontamination.decontamIndexBuild(bench, dcDir, "text", n = 3))
 
   /** FLEET-mode maintenance planning ([[operators.Similarity
     * .indexMaintenancePlan]] over a UNION of health rows — the claim at
@@ -3029,26 +3004,17 @@ object SparkEntry {
     // distinct (no rank-3 ties), 3rd-nearest of query e_c is cluster
     // (c−1)'s first member via its 0.2·e_c component
     import s.implicits._
-    def member(c: Int, eps: Double): Array[Float] = {
-      val a = new Array[Float](4)
-      a(c) = 1.0f; a((c + 1) % 4) = 0.2f
-      a((c + 2) % 4) = eps.toFloat
-      a
-    }
     val decCorpus = (0 until 4).flatMap(c => Seq(
-      (c * 2L, member(c, 0.0)), (c * 2L + 1, member(c, 0.05))))
+      (c * 2L, clusterMember(c, 0.0)), (c * 2L + 1, clusterMember(c, 0.05))))
       .toDF("id", "v")
-    val decQueries = (0 until 4).map { c =>
-      val a = new Array[Float](4); a(c) = 1.0f; (c.toLong, a)
-    }.toDF("qid", "qv")
-    val dirs = Seq("q234_ok_", "q234_frag_", "q234_dec_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(okDir, fragDir, decDir) = dirs.map(_.getAbsolutePath)
+    val decQueries = (0 until 4).map(c => (c.toLong, oneHot(c, 4)))
+      .toDF("qid", "qv")
+    TempDirs.scoped("q234_ok_", "q234_frag_", "q234_dec_") { case Seq(okDir,
+        fragDir, decDir) =>
       // three independent indexes: build them (and below, run their
       // eager recall probes) concurrently — the fleet-parallel shape,
-      // identical results (q254's inParallel rationale)
-      inParallel(
+      // identical results
+      Parallel.fleetMap(Seq[() => Unit](
         () => Similarity.ivfBuild(corpus, okDir, nList = 8,
           kmeansMaxIter = 2),
         () => {
@@ -3058,26 +3024,20 @@ object SparkEntry {
             corpus.filter(col("id") > mid))
         },
         () => Similarity.ivfBuild(decCorpus, decDir, nList = 4,
-          kmeansMaxIter = 10))
-      val healths = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration._
-        import scala.concurrent.ExecutionContext.Implicits.global
-        Await.result(Future.sequence(Seq(
-          Future(Similarity.ivfIndexHealth(s, okDir, queries, k = 3,
-            nProbe = 8).withColumn("idx", lit(1))),
-          Future(Similarity.ivfIndexHealth(s, fragDir, queries, k = 3,
-            nProbe = 8).withColumn("idx", lit(2))),
-          Future(Similarity.ivfIndexHealth(s, decDir, decQueries,
-            k = 3, nProbe = 1).withColumn("idx", lit(3))))),
-          10.minutes)
-      }
+          kmeansMaxIter = 10)))(_())
+      val healths = Parallel.fleetMap(Seq(
+        () => Similarity.ivfIndexHealth(s, okDir, queries, k = 3,
+          nProbe = 8).withColumn("idx", lit(1)),
+        () => Similarity.ivfIndexHealth(s, fragDir, queries, k = 3,
+          nProbe = 8).withColumn("idx", lit(2)),
+        () => Similarity.ivfIndexHealth(s, decDir, decQueries,
+          k = 3, nProbe = 1).withColumn("idx", lit(3))))(_())
       val fleet = healths.reduce(_ unionByName _)
       val plan = Similarity.indexMaintenancePlan(fleet,
         recallFloor = 0.9, maxFilesPerListCeiling = 1)
         .select(col("idx"), col("action"))
       plan.localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** PERSISTED decontamination index lifecycle
@@ -3093,9 +3053,7 @@ object SparkEntry {
   def q235_decontam_index(s: SparkSession, d: String): DataFrame = {
     val docs = T.documents(s, d)
     val bench = docs.filter(col("source") === "src0")
-    val stage = graft.util.TempDirs.fresh("q235_decontam_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.scoped("q235_decontam_") { case Seq(root) =>
       Decontamination.decontamIndexBuild(
         bench.filter(pmod(col("doc_id"), lit(2L)) === 0), root,
         "text", n = 3)
@@ -3104,7 +3062,7 @@ object SparkEntry {
       Decontamination.decontamIndexReport(s, root,
         docs.filter(col("source") =!= "src0"), "doc_id", "text")
         .localCheckpoint()
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** PERSISTED MinHash-LSH near-dup index lifecycle
@@ -3121,9 +3079,7 @@ object SparkEntry {
     val docs = T.documents(s, d)
     val baseSrc = Seq("src0", "src1", "src2", "src3", "src4")
     val base = docs.filter(col("source").isInCollection(baseSrc))
-    val stage = graft.util.TempDirs.fresh("q236_minhash_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.scoped("q236_minhash_") { case Seq(root) =>
       Dedup.minhashIndexBuild(
         base.filter(col("source").isInCollection(Seq("src0", "src1",
           "src2"))), root, "doc_id", "text")
@@ -3136,7 +3092,7 @@ object SparkEntry {
       Dedup.minhashIndexProbe(s, root,
         docs.filter(!col("source").isInCollection(baseSrc)), base,
         "doc_id", "text")
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** Health report of the persisted MinHash index
@@ -3155,9 +3111,7 @@ object SparkEntry {
     val docs = T.documents(s, d)
     val base = docs.filter(col("source").isInCollection(
       Seq("src0", "src1", "src2", "src3", "src4")))
-    val stage = graft.util.TempDirs.fresh("q238_mhhealth_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.scoped("q238_mhhealth_") { case Seq(root) =>
       Dedup.minhashIndexBuild(
         base.filter(col("source").isInCollection(Seq("src0", "src1",
           "src2"))), root, "doc_id", "text")
@@ -3172,7 +3126,7 @@ object SparkEntry {
         .select("shingle_n", "sig_k", "n_bands", "total_rows",
           "n_buckets", "max_bucket", "hot_buckets")
         .localCheckpoint()
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** CROSS-FAMILY fleet maintenance plan
@@ -3191,40 +3145,27 @@ object SparkEntry {
     * NULL and NULL never triggers an action, so each family only trips
     * its own rules. All three verdicts are structural facts of the
     * constructed states (q234's oracle shape), pinned by the oracle. */
-  def q239_fleet_text_plan(s: SparkSession, d: String): DataFrame = fixtureTuned(s) {
+  def q239_fleet_text_plan(s: SparkSession, d: String): DataFrame =
+    withConfs(s, FixtureConfs) {
     import s.implicits._
     // healthy IVF fixture: 8 distinct axis-ish vectors, queried by
     // themselves at probe-all — recall exactly 1.0
-    def v(c: Int, eps: Double): Array[Float] = {
-      val a = new Array[Float](4)
-      a(c % 4) = 1.0f; a((c + 1) % 4) = 0.2f
-      a((c + 2) % 4) = eps.toFloat
-      a
-    }
     val okCorpus = (0 until 4).flatMap(c => Seq(
-      (c * 2L, v(c, 0.0)), (c * 2L + 1, v(c, 0.05)))).toDF("id", "v")
-    val okQueries = (0 until 4).map { c =>
-      val a = new Array[Float](4); a(c) = 1.0f; (c.toLong, a)
-    }.toDF("qid", "qv")
-    // hot minhash fixture: 8 copies of one boilerplate line — every
-    // band funnels them into ONE bucket of 8, over the cap of 5
-    val hotDocs = (0L until 8L)
-      .map(i => (i, "all work and no play makes jack a dull boy"))
+      (c * 2L, clusterMember(c, 0.0)), (c * 2L + 1, clusterMember(c, 0.05))))
+      .toDF("id", "v")
+    val okQueries = (0 until 4).map(c => (c.toLong, oneHot(c, 4)))
+      .toDF("qid", "qv")
+    // hot minhash fixture: 8 copies of one boilerplate line
+    val hotDocs = (0L until 8L).map(i => (i, Boiler))
       .toDF("id", "text").repartition(1)
     // fragmented minhash fixture: distinct texts, built once then
     // appended three times (each a 1-file drop) — 4 fragments > 2
-    val texts = Seq(
-      0L -> "the quick brown fox jumps over the lazy dog",
-      1L -> "pack my box with five dozen liquor jugs",
-      2L -> "how vexingly quick daft zebras jump",
-      3L -> "sphinx of black quartz judge my vow",
+    val texts = Pangrams ++ Seq(
       4L -> "the five boxing wizards jump quickly",
       5L -> "jackdaws love my big sphinx of quartz")
     val fragDocs = texts.toDF("id", "text").repartition(1)
-    val dirs = Seq("q239_ivf_", "q239_hot_", "q239_frag_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(ivfDir, hotDir, fragDir) = dirs.map(_.getAbsolutePath)
+    TempDirs.scoped("q239_ivf_", "q239_hot_", "q239_frag_") { case Seq(ivfDir,
+        hotDir, fragDir) =>
       Similarity.ivfBuild(okCorpus, ivfDir, nList = 4, kmeansMaxIter = 10)
       Dedup.minhashIndexBuild(hotDocs, hotDir, "id", "text")
       Dedup.minhashIndexBuild(fragDocs.filter(col("id") < 3), fragDir,
@@ -3232,21 +3173,19 @@ object SparkEntry {
       (3L until 6L).foreach(i =>
         Dedup.minhashIndexAppend(s, fragDir,
           fragDocs.filter(col("id") === i), "id", "text"))
-      val fleet = Similarity
-        .ivfIndexHealth(s, ivfDir, okQueries, k = 3, nProbe = 4)
-        .withColumn("idx", lit(1))
-        .unionByName(Dedup.minhashIndexHealth(s, hotDir,
-          hotBucketCap = 5).withColumn("idx", lit(2)),
-          allowMissingColumns = true)
-        .unionByName(Dedup.minhashIndexHealth(s, fragDir,
-          hotBucketCap = 5).withColumn("idx", lit(3)),
-          allowMissingColumns = true)
+      // the IVF row takes the full recall probe (the fleet's one deep
+      // probe), the minhash rows their hot-bucket health at cap 5
+      val fleet = Similarity.fleetHealth(s, Seq(ivfDir, hotDir, fragDir),
+        hotBucketCap = 5, deepProbes = 1,
+        probeQueries = Map(ivfDir -> okQueries), probeK = 3,
+        probeNProbe = 4)
+      val idx = typedLit(Map(ivfDir -> 1, hotDir -> 2, fragDir -> 3))
       val plan = Similarity.indexMaintenancePlan(fleet,
         recallFloor = 0.9, maxFilesPerListCeiling = 10,
         maxFragmentsCeiling = 2)
-        .select(col("idx"), col("action"))
+        .select(idx(col("dir")).as("idx"), col("action"))
       plan.localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** PERSISTED SemDeDup state APPEND
@@ -3273,9 +3212,7 @@ object SparkEntry {
     val day1 = emb.filter(col("vec_id") % 10 === 8)
       .select(col("vec_id"), col("embedding"))
       .unionByName(planted)
-    val stage = graft.util.TempDirs.fresh("q240_semapp_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.scoped("q240_semapp_") { case Seq(root) =>
       val (labels, centroids) = operators.Clustering.kmeansWithCentroids(
         base, "vec_id", "embedding", k = 16, iterations = 2)
       operators.Clustering.semDedupStateSave(s, root, labels, "vec_id",
@@ -3288,7 +3225,7 @@ object SparkEntry {
         .unionByName(day1)
       operators.Clustering.semDedupIncrementalPersisted(s, root,
         vecTable, day2, "vec_id", "embedding", tau = 0.3)
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** BAYESIAN hyperparameter tuning through the full GAME CLI surface
@@ -3312,9 +3249,7 @@ object SparkEntry {
       element_at(col("embedding"), 1).cast("double").as("x1"),
       element_at(col("embedding"), 2).cast("double").as("x2"),
       pmod(col("vec_id"), lit(13L)).as("grp"))
-    val stage = graft.util.TempDirs.fresh("q241_tune_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.scoped("q241_tune_") { case Seq(root) =>
       pts.withColumn("_split",
         when(pmod(col("uid"), lit(5L)) === 0, lit("valid"))
           .otherwise(lit("train")))
@@ -3338,7 +3273,7 @@ object SparkEntry {
         results.forall(r => best.metric <= r.metric)))
         .toDF("n_trials", "lambdas_in_box", "selected_le_worst",
           "selected_le_all")
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** PERSISTED SimHash index ([[operators.Dedup.simhashIndexBuild]] /
@@ -3355,9 +3290,7 @@ object SparkEntry {
     val docs = T.documents(s, d)
     val baseSrc = Seq("src0", "src1", "src2", "src3", "src4")
     val base = docs.filter(col("source").isInCollection(baseSrc))
-    val stage = graft.util.TempDirs.fresh("q242_simhash_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.scoped("q242_simhash_") { case Seq(root) =>
       Dedup.simhashIndexBuild(
         base.filter(col("source").isInCollection(Seq("src0", "src1",
           "src2"))), root, "doc_id", "text")
@@ -3368,7 +3301,7 @@ object SparkEntry {
         docs.filter(!col("source").isInCollection(baseSrc)),
         "doc_id", "text", maxHamming = 16)
         .withColumn("hamming", col("hamming").cast("long"))
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** Health report of the persisted SimHash index
@@ -3383,9 +3316,7 @@ object SparkEntry {
     val docs = T.documents(s, d)
     val base = docs.filter(col("source").isInCollection(
       Seq("src0", "src1", "src2", "src3", "src4")))
-    val stage = graft.util.TempDirs.fresh("q243_shhealth_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.scoped("q243_shhealth_") { case Seq(root) =>
       Dedup.simhashIndexBuild(
         base.filter(col("source").isInCollection(Seq("src0", "src1",
           "src2"))), root, "doc_id", "text")
@@ -3395,7 +3326,7 @@ object SparkEntry {
       Dedup.simhashIndexHealth(s, root, hotBucketCap = 25)
         .select("total_rows", "n_buckets", "max_bucket", "hot_buckets")
         .localCheckpoint()
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** Centroid-DRIFT probe of a persisted IVF index
@@ -3413,16 +3344,11 @@ object SparkEntry {
     * planner's verdicts. */
   def q244_ivf_drift(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    def pt(dim: Int): Array[Float] = {
-      val a = new Array[Float](8); a(dim) = 1.0f; a
-    }
-    val corpus = (0 until 4).map(c => (c.toLong, pt(c))).toDF("id", "v")
+    val corpus = (0 until 4).map(c => (c.toLong, oneHot(c))).toDF("id", "v")
     val healthy = corpus
-    val drifted = (0 until 4).map(c => (100L + c, pt(4 + c)))
+    val drifted = (0 until 4).map(c => (100L + c, oneHot(4 + c)))
       .toDF("id", "v")
-    val stage = graft.util.TempDirs.fresh("q244_drift_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.scoped("q244_drift_") { case Seq(root) =>
       Similarity.ivfBuild(corpus, root, nList = 4, kmeansMaxIter = 10)
       val fleet = Similarity.ivfDriftProbe(s, root, healthy)
         .withColumn("which", lit("healthy"))
@@ -3437,7 +3363,7 @@ object SparkEntry {
           round(col("drift_ratio"), 6).as("drift_ratio"),
           col("action"))
         .localCheckpoint()
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** Centroid+codebook DRIFT probe of a persisted IVF-PQ index
@@ -3452,15 +3378,10 @@ object SparkEntry {
     * centroid) pins ratio 0.0 → `rebuild`. */
   def q248_ivfpq_drift(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    def pt(dim: Int): Array[Float] = {
-      val a = new Array[Float](8); a(dim) = 1.0f; a
-    }
-    val corpus = (0 until 4).map(c => (c.toLong, pt(c))).toDF("id", "v")
-    val drifted = (0 until 4).map(c => (100L + c, pt(4 + c)))
+    val corpus = (0 until 4).map(c => (c.toLong, oneHot(c))).toDF("id", "v")
+    val drifted = (0 until 4).map(c => (100L + c, oneHot(4 + c)))
       .toDF("id", "v")
-    val stage = graft.util.TempDirs.fresh("q248_pqdrift_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.scoped("q248_pqdrift_") { case Seq(root) =>
       Similarity.ivfPqBuild(corpus, root, nList = 4, m = 4, nCodes = 4,
         kmeansMaxIter = 10)
       val fleet = Similarity.ivfPqDriftProbe(s, root, corpus)
@@ -3476,7 +3397,7 @@ object SparkEntry {
           round(col("drift_ratio"), 6).as("drift_ratio"),
           col("action"))
         .localCheckpoint()
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** DAILY-INGEST pipeline over PERSISTED state — the operational
@@ -3505,15 +3426,12 @@ object SparkEntry {
     val base = docs.filter(col("source").isInCollection(baseSrc))
     val batch = docs.filter(
       !col("source").isInCollection("src0" +: baseSrc))
-    val dirs = Seq("q249_mh_", "q249_dc_").map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(mhDir, dcDir) = dirs.map(_.getAbsolutePath)
+    TempDirs.scoped("q249_mh_", "q249_dc_") { case Seq(mhDir, dcDir) =>
       // two independent writer-lock domains — build concurrently
-      // (q254's inParallel rationale)
-      inParallel(
+      Parallel.fleetMap(Seq[() => Unit](
         () => Dedup.minhashIndexBuild(base, mhDir, "doc_id", "text"),
         () => Decontamination.decontamIndexBuild(bench, dcDir, "text",
-          n = 3))
+          n = 3)))(_())
       val exactFlag = Dedup.incrementalExact(batch, base, "doc_id",
         "text")
       val nearIds = Dedup.minhashIndexProbe(s, mhDir, batch, base,
@@ -3536,7 +3454,7 @@ object SparkEntry {
             !coalesce(col("_near"), lit(false)) &&
             !col("is_contaminated")).as("accepted"))
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** PERSISTED exact-hash index ([[operators.Dedup.exactIndexBuild]] /
@@ -3551,9 +3469,7 @@ object SparkEntry {
   def q250_exact_index(s: SparkSession, d: String): DataFrame = {
     val docs = T.documents(s, d)
     val baseSrc = Seq("src1", "src2", "src3", "src4")
-    val stage = graft.util.TempDirs.fresh("q250_exact_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.scoped("q250_exact_") { case Seq(root) =>
       Dedup.exactIndexBuild(
         docs.filter(col("source").isInCollection(Seq("src1", "src2"))),
         root, "doc_id", "text")
@@ -3564,7 +3480,7 @@ object SparkEntry {
         docs.filter(!col("source").isInCollection("src0" +: baseSrc)),
         "doc_id", "text")
         .localCheckpoint()
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** STREAMING admission against persisted curation state
@@ -3586,20 +3502,13 @@ object SparkEntry {
     val base = docs.filter(col("source").isInCollection(baseSrc))
     val batch = docs.filter(
       !col("source").isInCollection("src0" +: baseSrc))
-    val dirs = Seq("q251_ex_", "q251_mh_", "q251_dc_", "q251_stage_",
-      "q251_out_", "q251_ckpt_").map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, mhDir, dcDir, stageDir, outDir, ckptDir) =
-        dirs.map(_.getAbsolutePath)
-      // four independent destinations — build concurrently (q254's
-      // inParallel rationale)
-      inParallel(
-        () => Dedup.exactIndexBuild(base, exDir, "doc_id", "text"),
-        () => Dedup.minhashIndexBuild(base, mhDir, "doc_id", "text"),
-        () => Decontamination.decontamIndexBuild(bench, dcDir, "text",
-          n = 3),
-        () => batch.select(col("doc_id"), col("text")).repartition(6)
-          .write.parquet(stageDir))
+    TempDirs.scoped("q251_ex_", "q251_mh_", "q251_dc_", "q251_stage_",
+      "q251_out_", "q251_ckpt_") { case Seq(exDir, mhDir, dcDir, stageDir,
+        outDir, ckptDir) =>
+      // four independent destinations — build concurrently
+      Parallel.fleetMap(admissionIndexBuilds(base, bench, exDir, mhDir,
+        dcDir, "doc_id") :+ (() => batch.select(col("doc_id"), col("text"))
+          .repartition(6).write.parquet(stageDir)))(_())
       val stream = s.readStream
         .schema(org.apache.spark.sql.types.StructType(
           batch.select(col("doc_id"), col("text")).schema.fields))
@@ -3610,7 +3519,7 @@ object SparkEntry {
       try q.processAllAvailable()
       finally q.stop()
       s.read.parquet(outDir).localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** ADMISSION FUNNEL by source — the data-ops dashboard over the
@@ -3630,17 +3539,11 @@ object SparkEntry {
     val base = docs.filter(col("source").isInCollection(baseSrc))
     val batch = docs.filter(
       !col("source").isInCollection("src0" +: baseSrc))
-    val dirs = Seq("q252_ex_", "q252_mh_", "q252_dc_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, mhDir, dcDir) = dirs.map(_.getAbsolutePath)
+    TempDirs.scoped("q252_ex_", "q252_mh_", "q252_dc_") { case Seq(exDir, mhDir,
+        dcDir) =>
       // three independent writer-lock domains — build concurrently
-      // (q254's inParallel rationale)
-      inParallel(
-        () => Dedup.exactIndexBuild(base, exDir, "doc_id", "text"),
-        () => Dedup.minhashIndexBuild(base, mhDir, "doc_id", "text"),
-        () => Decontamination.decontamIndexBuild(bench, dcDir, "text",
-          n = 3))
+      Parallel.fleetMap(admissionIndexBuilds(base, bench, exDir, mhDir,
+        dcDir, "doc_id"))(_())
       val verdicts = operators.CorpusPipeline.admitBatch(s, batch,
         exDir, mhDir, dcDir, base, "doc_id", "text")
       batch.select(col("doc_id"), col("source"))
@@ -3653,7 +3556,7 @@ object SparkEntry {
           count(when(col("is_contaminated"), 1)).as("n_contaminated"),
           count(when(col("accepted"), 1)).as("n_accepted"))
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** FLEET APPLY lifecycle ([[operators.Similarity
@@ -3668,27 +3571,20 @@ object SparkEntry {
     * every executed family goes quiet (`none`), the skipped one still
     * demands its rebuild. All structural facts of the constructed
     * states. */
-  def q253_fleet_apply(s: SparkSession, d: String): DataFrame = fixtureTuned(s) {
+  def q253_fleet_apply(s: SparkSession, d: String): DataFrame =
+    withConfs(s, FixtureConfs) {
     import s.implicits._
-    val boiler = "all work and no play makes jack a dull boy"
-    val hotDocs = (0L until 8L).map(i => (i, boiler)).toDF("id", "text")
+    val hotDocs = (0L until 8L).map(i => (i, Boiler)).toDF("id", "text")
       .repartition(1)
-    val texts = Seq(
-      0L -> "the quick brown fox jumps over the lazy dog",
-      1L -> "pack my box with five dozen liquor jugs",
-      2L -> "how vexingly quick daft zebras jump",
-      3L -> "sphinx of black quartz judge my vow")
-    val fragDocs = texts.toDF("id", "text").repartition(1)
+    val fragDocs = Pangrams.toDF("id", "text").repartition(1)
     def vv(c: Double) = Seq(c, c + 0.001)
     val semVecs = Seq((0L, vv(1.0)), (1L, vv(1.0)), (2L, vv(1.0)),
       (3L, vv(-5.0))).toDF("id", "vec")
-    val dirs = Seq("q253_mh_", "q253_sh_", "q253_sem_", "q253_ex_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(mhDir, shDir, semDir, exDir) = dirs.map(_.getAbsolutePath)
+    TempDirs.scoped("q253_mh_", "q253_sh_", "q253_sem_",
+      "q253_ex_") { case Seq(mhDir, shDir, semDir, exDir) =>
       // four independent writer-lock domains — build concurrently
-      // (q254's inParallel rationale; intra-family append order kept)
-      inParallel(
+      // (intra-family append order kept)
+      Parallel.fleetMap(Seq[() => Unit](
         () => Dedup.minhashIndexBuild(hotDocs, mhDir, "id", "text"),
         () => {
           Dedup.simhashIndexBuild(fragDocs.filter(col("id") < 2), shDir,
@@ -3696,28 +3592,16 @@ object SparkEntry {
           (2L until 4L).foreach(i => Dedup.simhashIndexAppend(s, shDir,
             fragDocs.filter(col("id") === i), "id", "text"))
         },
-        () => {
-          val (labels, centroids) = operators.Clustering
-            .kmeansWithCentroids(semVecs, "id", "vec", k = 2,
-              iterations = 2)
-          operators.Clustering.semDedupStateSave(s, semDir, labels,
-            "id", centroids)
-          operators.Clustering.releasePairs(labels)
-        },
+        () => semStateBuild(s, semDir, semVecs, "id", "vec", k = 2),
         () => {
           Dedup.exactIndexBuild(fragDocs.filter(col("id") === 0L),
             exDir, "id", "text")
           (1L until 4L).foreach(i => Dedup.exactIndexAppend(s, exDir,
             fragDocs.filter(col("id") === i), "id", "text"))
-        })
+        }))(_())
       def plan() = Similarity.indexMaintenancePlan(
-        Dedup.minhashIndexHealth(s, mhDir, hotBucketCap = 5)
-          .unionByName(Dedup.simhashIndexHealth(s, shDir),
-            allowMissingColumns = true)
-          .unionByName(operators.Clustering.semDedupStateHealth(s,
-            semDir, hotClusterCap = 2), allowMissingColumns = true)
-          .unionByName(Dedup.exactIndexHealth(s, exDir),
-            allowMissingColumns = true),
+        Similarity.fleetHealth(s, Seq(mhDir, shDir, semDir, exDir),
+          hotBucketCap = 5, hotClusterCap = 2),
         recallFloor = 0.9, maxFilesPerListCeiling = 10,
         maxFragmentsCeiling = 2, hotClustersCeiling = 0L)
       val report = Similarity.fleetMaintenanceApply(s, plan(),
@@ -3728,7 +3612,7 @@ object SparkEntry {
         .select(col("family"), col("action"), col("status"),
           col("action_after"))
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** DELETE/retraction lifecycle across the persisted-index fleet
@@ -3745,41 +3629,31 @@ object SparkEntry {
     * `compact`, folded → `none`). All values structural facts of the
     * constructed states — the q253 lifecycle-gate shape. */
   def q254_index_delete(s: SparkSession, d: String): DataFrame =
-    fixtureTuned(s) {
+    withConfs(s, FixtureConfs) {
     import s.implicits._
-    val texts = Seq(
-      0L -> "the quick brown fox jumps over the lazy dog",
-      1L -> "pack my box with five dozen liquor jugs",
-      2L -> "how vexingly quick daft zebras jump",
-      3L -> "sphinx of black quartz judge my vow")
-    val docs = texts.toDF("id", "text").repartition(1)
+    val docs = Pangrams.toDF("id", "text").repartition(1)
     val doomed = docs.filter(col("id") === 1L)
     // probe batch: fresh ids carrying the EXACT text of docs 0 and 1 —
     // both families must report them as duplicates until 1 is erased
-    val probeDocs = Seq(100L -> texts(0)._2, 101L -> texts(1)._2)
+    val probeDocs = Seq(100L -> Pangrams(0)._2, 101L -> Pangrams(1)._2)
       .toDF("id", "text").repartition(1)
-    def pt(dim: Int): Array[Float] = {
-      val a = new Array[Float](8); a(dim) = 1.0f; a
-    }
-    val corpus = (0 until 4).map(c => (c.toLong, pt(c))).toDF("id", "v")
+    val corpus = (0 until 4).map(c => (c.toLong, oneHot(c))).toDF("id", "v")
     // query sits between axis points 1 and 2: nearest is 2 (cos .8);
     // after deleting 2 the nearest LIVE point is 1 (cos .6)
     val qv = { val a = new Array[Float](8); a(1) = 0.6f; a(2) = 0.8f; a }
     val queries = Seq((0L, qv)).toDF("qid", "qv")
-    val dirs = Seq("q254_ex_", "q254_mh_", "q254_sh_", "q254_ivf_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, mhDir, shDir, ivfDir) = dirs.map(_.getAbsolutePath)
+    TempDirs.scoped("q254_ex_", "q254_mh_", "q254_sh_",
+      "q254_ivf_") { case Seq(exDir, mhDir, shDir, ivfDir) =>
       // the four families are independent writer-lock domains — their
       // builds (and below, deletes/compactions) run CONCURRENTLY, the
       // shape a fleet maintenance loop actually has; at fixture scale
       // each is scheduler-latency-bound so the overlap is ~4x
-      inParallel(
+      Parallel.fleetMap(Seq[() => Unit](
         () => Dedup.exactIndexBuild(docs, exDir, "id", "text"),
         () => Dedup.minhashIndexBuild(docs, mhDir, "id", "text"),
         () => Dedup.simhashIndexBuild(docs, shDir, "id", "text"),
         () => Similarity.ivfBuild(corpus, ivfDir, nList = 4,
-          kmeansMaxIter = 2))
+          kmeansMaxIter = 2)))(_())
       // the four probe hit-counts collapse into ONE collect (tagged
       // one-row aggregates unioned) and the four health rows into ONE
       // plan collect — this gate runs 3 phases × 4 families, and at
@@ -3790,44 +3664,28 @@ object SparkEntry {
         def tag(name: String, df: org.apache.spark.sql.DataFrame) =
           df.agg(count(lit(1)).as("n"))
             .select(lit(name).as("family"), col("n"))
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration._
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val mhF = Future(Dedup.minhashIndexProbe(s, mhDir, probeDocs,
-          docs, "id", "text", threshold = 0.5))
-        val shF = Future(Dedup.simhashIndexProbe(s, shDir, probeDocs,
-          "id", "text", maxHamming = 0))
-        val ivfF = Future(Similarity.ivfQuery(s, ivfDir, queries,
-          k = 1, nProbe = 4))
-        Seq(
-          tag("exact", Dedup.exactIndexProbe(s, exDir, probeDocs, "id",
-            "text").filter(col("is_dup"))),
-          tag("minhash", Await.result(mhF, 10.minutes)
+        Parallel.fleetMap(Seq(
+          () => tag("exact", Dedup.exactIndexProbe(s, exDir, probeDocs,
+            "id", "text").filter(col("is_dup"))),
+          () => tag("minhash", Dedup.minhashIndexProbe(s, mhDir,
+            probeDocs, docs, "id", "text", threshold = 0.5)
             .filter(col("base_id") === 1L)),
-          tag("simhash", Await.result(shF, 10.minutes)
+          () => tag("simhash", Dedup.simhashIndexProbe(s, shDir,
+            probeDocs, "id", "text", maxHamming = 0)
             .filter(col("base_id") === 1L)),
-          tag("ivf", Await.result(ivfF, 10.minutes)
-            .filter(col("id") === 2L)))
+          () => tag("ivf", Similarity.ivfQuery(s, ivfDir, queries,
+            k = 1, nProbe = 4).filter(col("id") === 2L))))(_())
           .reduce(_ unionByName _)
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       }
       def state(): Map[String, (Long, String)] = {
-        val health = Dedup.exactIndexHealth(s, exDir)
-          .withColumn("family", lit("exact"))
-          .unionByName(Dedup.minhashIndexHealth(s, mhDir)
-            .withColumn("family", lit("minhash")),
-            allowMissingColumns = true)
-          .unionByName(Dedup.simhashIndexHealth(s, shDir)
-            .withColumn("family", lit("simhash")),
-            allowMissingColumns = true)
-          // light health (no recall probe): this gate verdicts on
-          // tombstone debt alone, and its action column only consults
-          // deleted_pending under tombstoneDebtCeiling=0 — paying a
-          // brute-force recall pass 3× per run bought nothing (the
-          // r14 judge's q254-cost finding)
-          .unionByName(Similarity.ivfIndexHealthLight(s, ivfDir)
-            .withColumn("family", lit("ivf")),
-            allowMissingColumns = true)
+        // light IVF health (no recall probe, fleetHealth's default):
+        // this gate verdicts on tombstone debt alone, and its action
+        // column only consults deleted_pending under
+        // tombstoneDebtCeiling=0 — paying a brute-force recall pass 3×
+        // per run bought nothing (the r14 judge's q254-cost finding)
+        val health = Similarity.fleetHealth(s,
+          Seq(exDir, mhDir, shDir, ivfDir))
         Similarity.indexMaintenancePlan(health, recallFloor = 0.0,
           maxFilesPerListCeiling = Long.MaxValue,
           tombstoneDebtCeiling = 0L)
@@ -3840,33 +3698,29 @@ object SparkEntry {
         String)] = {
         // hits and state are both read-only over the same immutable
         // manifest snapshots — overlap their collects too
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration._
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val hhF = Future(hits()); val stF = Future(state())
-        val hh = Await.result(hhF, 10.minutes)
-        val st = Await.result(stF, 10.minutes)
+        val Seq(Left(hh), Right(st)) = Parallel.fleetMap(
+          Seq(() => Left(hits()), () => Right(state())))(_())
         hh.keys.toSeq.sorted.map(f =>
           (f, phase, hh(f), st(f)._1, st(f)._2))
       }
       val before = phaseRows("1_before")
-      inParallel(
+      Parallel.fleetMap(Seq[() => Unit](
         () => Dedup.exactIndexDelete(s, exDir, doomed, "id", "text"),
         () => Dedup.minhashIndexDelete(s, mhDir, doomed.select("id")),
         () => Dedup.simhashIndexDelete(s, shDir, doomed.select("id")),
         () => Similarity.ivfDelete(s, ivfDir,
-          corpus.filter(col("id") === 2L).select("id")))
+          corpus.filter(col("id") === 2L).select("id"))))(_())
       val deleted = phaseRows("2_deleted")
-      inParallel(
+      Parallel.fleetMap(Seq[() => Unit](
         () => Dedup.exactIndexCompact(s, exDir),
         () => Dedup.minhashIndexCompact(s, mhDir),
         () => Dedup.simhashIndexCompact(s, shDir),
-        () => Similarity.ivfCompact(s, ivfDir))
+        () => Similarity.ivfCompact(s, ivfDir)))(_())
       val compacted = phaseRows("3_compacted")
       (before ++ deleted ++ compacted)
         .toDF("family", "phase", "n_hits", "deleted_pending", "action")
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
     }
 
   /** Cross-family admission ATOMICITY gate
@@ -3882,24 +3736,19 @@ object SparkEntry {
     * repair re-append converges the fleet and the re-probe finds the
     * previously-invisible near-dup. Structural facts pinned per phase:
     * gap count, the gap itself, and the post-repair probe hit. */
-  def q255_ingest_reconcile(s: SparkSession, d: String): DataFrame = fixtureTuned(s) {
+  def q255_ingest_reconcile(s: SparkSession, d: String): DataFrame =
+    withConfs(s, FixtureConfs) {
     import s.implicits._
-    val base = Seq(0L -> "the quick brown fox jumps over the lazy dog")
-      .toDF("id", "text").repartition(1)
-    val b1 = Seq(10L -> "pack my box with five dozen liquor jugs")
-      .toDF("id", "text").repartition(1)
-    val b2 = Seq(20L -> "how vexingly quick daft zebras jump")
-      .toDF("id", "text").repartition(1)
-    val dirs = Seq("q255_ex_", "q255_mh_", "q255_sh_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, mhDir, shDir) = dirs.map(_.getAbsolutePath)
+    val base = Seq(Pangrams(0)).toDF("id", "text").repartition(1)
+    val b1 = Seq(10L -> Pangrams(1)._2).toDF("id", "text").repartition(1)
+    val b2 = Seq(20L -> Pangrams(2)._2).toDF("id", "text").repartition(1)
+    TempDirs.scoped("q255_ex_", "q255_mh_", "q255_sh_") { case Seq(exDir, mhDir,
+        shDir) =>
       // three independent writer-lock domains — build concurrently
-      // (q254's inParallel rationale)
-      inParallel(
+      Parallel.fleetMap(Seq[() => Unit](
         () => Dedup.exactIndexBuild(base, exDir, "id", "text"),
         () => Dedup.minhashIndexBuild(base, mhDir, "id", "text"),
-        () => Dedup.simhashIndexBuild(base, shDir, "id", "text"))
+        () => Dedup.simhashIndexBuild(base, shDir, "id", "text")))(_())
       val fams = Map("exact" -> exDir, "minhash" -> mhDir,
         "simhash" -> shDir)
       def gapState(): (Long, String) = {
@@ -3911,8 +3760,8 @@ object SparkEntry {
       }
       def shProbeHits(): Long =
         Dedup.simhashIndexProbe(s, shDir,
-          Seq(30L -> "how vexingly quick daft zebras jump")
-            .toDF("id", "text"), "id", "text", maxHamming = 0)
+          Seq(30L -> Pangrams(2)._2).toDF("id", "text"), "id", "text",
+          maxHamming = 0)
           .filter(col("base_id") === 20L).count()
       // b1 admits everywhere; b2's admission crashes before SimHash
       Seq(("b1", b1, true), ("b2", b2, false)).foreach {
@@ -3940,7 +3789,7 @@ object SparkEntry {
         ("2_after_repair", nGap2, gap2, hits2))
         .toDF("phase", "n_gaps", "gaps", "simhash_probe_hits")
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** PERSISTED admission-funnel history + SOURING-SOURCE detector
@@ -3956,7 +3805,8 @@ object SparkEntry {
     * and trailing means are structural facts of the planted fixture
     * (the near-dup texts extend the base doc by one token: 4 of 5
     * shingles shared, J = 0.8 ≥ 0.5). */
-  def q256_funnel_history(s: SparkSession, d: String): DataFrame = fixtureTuned(s) {
+  def q256_funnel_history(s: SparkSession, d: String): DataFrame =
+    withConfs(s, FixtureConfs) {
     import s.implicits._
     val base = Seq((0L, "alpha beta gamma delta epsilon zeta"))
       .toDF("id", "text").repartition(1)
@@ -3980,17 +3830,11 @@ object SparkEntry {
         (16L, "s1", "window door wall floor roof ceiling"),
         (25L, "s2", nd("theta")),
         (26L, "s2", nd("iota"))))
-    val dirs = Seq("q256_ex_", "q256_mh_", "q256_dc_", "q256_hist_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, mhDir, dcDir, histDir) = dirs.map(_.getAbsolutePath)
+    TempDirs.scoped("q256_ex_", "q256_mh_", "q256_dc_",
+      "q256_hist_") { case Seq(exDir, mhDir, dcDir, histDir) =>
       // three independent writer-lock domains — build concurrently
-      // (q254's inParallel rationale)
-      inParallel(
-        () => Dedup.exactIndexBuild(base, exDir, "id", "text"),
-        () => Dedup.minhashIndexBuild(base, mhDir, "id", "text"),
-        () => Decontamination.decontamIndexBuild(bench, dcDir, "text",
-          n = 3))
+      Parallel.fleetMap(admissionIndexBuilds(base, bench, exDir, mhDir,
+        dcDir, "id"))(_())
       days.foreach { case (day, rows) =>
         val batch = rows.toDF("id", "source", "text")
         val verdicts = operators.CorpusPipeline.admitBatch(s, batch,
@@ -4007,7 +3851,7 @@ object SparkEntry {
       operators.CorpusPipeline.souringSources(s, histDir,
         window = 2, ratioCeiling = 2.0)
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** The daily-ingest loop CLOSED over persisted state (q249's
@@ -4031,17 +3875,11 @@ object SparkEntry {
       !col("source").isInCollection("src0" +: baseSrc))
     val day1 = batchAll.filter(col("doc_id") % 2 === 0)
     val day2 = batchAll.filter(col("doc_id") % 2 === 1)
-    val dirs = Seq("q257_ex_", "q257_mh_", "q257_dc_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, mhDir, dcDir) = dirs.map(_.getAbsolutePath)
+    TempDirs.scoped("q257_ex_", "q257_mh_", "q257_dc_") { case Seq(exDir, mhDir,
+        dcDir) =>
       // three independent writer-lock domains — build concurrently
-      // (q254's inParallel rationale)
-      inParallel(
-        () => Dedup.exactIndexBuild(base, exDir, "doc_id", "text"),
-        () => Dedup.minhashIndexBuild(base, mhDir, "doc_id", "text"),
-        () => Decontamination.decontamIndexBuild(bench, dcDir, "text",
-          n = 3))
+      Parallel.fleetMap(admissionIndexBuilds(base, bench, exDir, mhDir,
+        dcDir, "doc_id"))(_())
       val v1 = operators.CorpusPipeline.admitBatch(s, day1, exDir,
         mhDir, dcDir, base, "doc_id", "text")
       // MATERIALIZE the accepted set before mutating the indexes it
@@ -4051,16 +3889,16 @@ object SparkEntry {
         .join(v1.filter(col("accepted")).select("doc_id"),
           Seq("doc_id"), "left_semi")
         .localCheckpoint(true)
-      inParallel(
+      Parallel.fleetMap(Seq[() => Unit](
         () => Dedup.exactIndexAppend(s, exDir, acc1, "doc_id", "text",
           batchId = Some("day1")),
         () => Dedup.minhashIndexAppend(s, mhDir, acc1, "doc_id", "text",
-          batchId = Some("day1")))
+          batchId = Some("day1"))))(_())
       operators.CorpusPipeline.admitBatch(s, day2, exDir, mhDir, dcDir,
         base.select(col("doc_id"), col("text")).unionByName(acc1),
         "doc_id", "text")
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** CORPUS-REFRESH retraction applied fleet-wide
@@ -4076,43 +3914,33 @@ object SparkEntry {
     * silent — while the SKIPPED family's probe still fires, pinning
     * that the skip is real. One row per family: (family, status,
     * n_removed, hits_before, hits_after), all structural facts. */
-  def q258_fleet_delete(s: SparkSession, d: String): DataFrame = fixtureTuned(s) {
+  def q258_fleet_delete(s: SparkSession, d: String): DataFrame =
+    withConfs(s, FixtureConfs) {
     import s.implicits._
-    val texts = Seq(
-      0L -> "the quick brown fox jumps over the lazy dog",
-      1L -> "pack my box with five dozen liquor jugs",
-      2L -> "how vexingly quick daft zebras jump",
-      3L -> "sphinx of black quartz judge my vow")
-    val v1 = texts.toDF("id", "text").repartition(1)
+    val v1 = Pangrams.toDF("id", "text").repartition(1)
     // the refresh drops doc 1 (the takedown) and keeps the rest
     val v2 = v1.filter(col("id") =!= 1L)
-    val probeDocs = Seq(101L -> texts(1)._2).toDF("id", "text")
+    val probeDocs = Seq(101L -> Pangrams(1)._2).toDF("id", "text")
       .repartition(1)
-    def pt(dim: Int): Array[Float] = {
-      val a = new Array[Float](8); a(dim) = 1.0f; a
-    }
-    val vecs = (0 until 4).map(c => (c.toLong, pt(c))).toDF("id", "v")
+    val vecs = (0 until 4).map(c => (c.toLong, oneHot(c))).toDF("id", "v")
     // query nearest doc 1's vector; after the erasure the best LIVE
     // neighbor is doc 2's
     val qv = { val a = new Array[Float](8); a(1) = 0.8f; a(2) = 0.6f; a }
     val queries = Seq((0L, qv)).toDF("qid", "qv")
-    val dirs = Seq("q258_ex_", "q258_mh_", "q258_sh_", "q258_ivf_",
-      "q258_dc_").map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, mhDir, shDir, ivfDir, dcDir) =
-        dirs.map(_.getAbsolutePath)
+    TempDirs.scoped("q258_ex_", "q258_mh_", "q258_sh_", "q258_ivf_",
+      "q258_dc_") { case Seq(exDir, mhDir, shDir, ivfDir, dcDir) =>
       // five independent writer-lock domains — build concurrently
-      // (q254's inParallel rationale; the decontam index holds doc 1's
+      // (the decontam index holds doc 1's
       // shingles too: the family the fleet delete must SKIP
       // (shingle-keyed))
-      inParallel(
+      Parallel.fleetMap(Seq[() => Unit](
         () => Dedup.exactIndexBuild(v1, exDir, "id", "text"),
         () => Dedup.minhashIndexBuild(v1, mhDir, "id", "text"),
         () => Dedup.simhashIndexBuild(v1, shDir, "id", "text"),
         () => Similarity.ivfBuild(vecs, ivfDir, nList = 4,
           kmeansMaxIter = 2),
         () => Decontamination.decontamIndexBuild(
-          v1.filter(col("id") === 1L), dcDir, "text", n = 3))
+          v1.filter(col("id") === 1L), dcDir, "text", n = 3)))(_())
       def hits(): Map[String, Long] = {
         def tag(name: String, df: org.apache.spark.sql.DataFrame) =
           df.agg(count(lit(1)).as("n"))
@@ -4157,7 +3985,7 @@ object SparkEntry {
         .toDF("family", "status", "n_removed", "hits_before",
           "hits_after")
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** Fleet-wide ERASURE-COMPLETION lifecycle across ALL SEVEN persisted
@@ -4183,7 +4011,7 @@ object SparkEntry {
     * residue row (1, 1, 0, true). All values structural facts of the
     * constructed states. */
   def q259_fleet_erase_audit(s: SparkSession, d: String): DataFrame =
-    fixtureTuned(s) {
+    withConfs(s, FixtureConfs) {
     import s.implicits._
     // doc 3 SHARES one 3-gram ("with five dozen") with the doomed doc
     // 1: the decontam rebuild keeps that shingle BY DESIGN (a remaining
@@ -4191,28 +4019,19 @@ object SparkEntry {
     // input the rebuild took — COMPUTES that expected residue and
     // reports complete=true with the residue explained, instead of
     // punting the judgment to the caller (the r15 undecidability gap)
-    val texts = Seq(
-      0L -> "the quick brown fox jumps over the lazy dog",
-      1L -> "pack my box with five dozen liquor jugs",
-      2L -> "how vexingly quick daft zebras jump",
-      3L -> "sphinx of black quartz with five dozen arrows")
+    val texts = Pangrams.take(3) :+
+      (3L -> "sphinx of black quartz with five dozen arrows")
     val docs = texts.toDF("id", "text").repartition(1)
     val doomed = docs.filter(col("id") === 1L).localCheckpoint(true)
     val remaining = docs.filter(col("id") =!= 1L)
-    def pt(dim: Int): Array[Float] = {
-      val a = new Array[Float](8); a(dim) = 1.0f; a
-    }
-    val vecs = (0 until 4).map(c => (c.toLong, pt(c))).toDF("id", "v")
-    val dvecs = (0 until 4).map(c =>
-      (c.toLong, pt(c).map(_.toDouble).toSeq)).toDF("id", "vec")
-    val dirs = Seq("q259_ex_", "q259_mh_", "q259_sh_", "q259_ivf_",
-      "q259_pq_", "q259_sem_", "q259_dc_").map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, mhDir, shDir, ivfDir, pqDir, semDir, dcDir) =
-        dirs.map(_.getAbsolutePath)
+    val vecs = (0 until 4).map(c => (c.toLong, oneHot(c))).toDF("id", "v")
+    val dvecs = (0 until 4).map(c => (c.toLong, axis(c))).toDF("id", "vec")
+    TempDirs.scoped("q259_ex_", "q259_mh_", "q259_sh_", "q259_ivf_", "q259_pq_",
+      "q259_sem_", "q259_dc_") { case Seq(exDir, mhDir, shDir, ivfDir, pqDir,
+        semDir, dcDir) =>
       // seven independent writer-lock domains build concurrently (the
       // fleet-parallel shape; see q254)
-      inParallel(
+      Parallel.fleetMap(Seq[() => Unit](
         () => Dedup.exactIndexBuild(docs, exDir, "id", "text"),
         () => Dedup.minhashIndexBuild(docs, mhDir, "id", "text"),
         () => Dedup.simhashIndexBuild(docs, shDir, "id", "text"),
@@ -4220,16 +4039,9 @@ object SparkEntry {
           kmeansMaxIter = 2),
         () => Similarity.ivfPqBuild(vecs, pqDir, nList = 2, m = 2,
           nCodes = 2),
-        () => {
-          val (labels, cents) = operators.Clustering
-            .kmeansWithCentroids(dvecs, "id", "vec", k = 2,
-              iterations = 2)
-          operators.Clustering.semDedupStateSave(s, semDir, labels,
-            "id", cents)
-          operators.Clustering.releasePairs(labels)
-        },
+        () => semStateBuild(s, semDir, dvecs, "id", "vec", k = 2),
         () => Decontamination.decontamIndexBuild(docs, dcDir, "text",
-          n = 3))
+          n = 3)))(_())
       val fleet = Seq(exDir, mhDir, shDir, ivfDir, pqDir, semDir, dcDir)
       def audit(phase: String, status: Map[String, String])
         : Seq[(String, String, String, Long, Long, Long, Boolean)] =
@@ -4248,20 +4060,56 @@ object SparkEntry {
         .select("family", "status").collect()
         .map(r => r.getString(0) -> r.getString(1)).toMap
       val deleted = audit("2_deleted", statuses)
-      inParallel(
+      Parallel.fleetMap(Seq[() => Unit](
         () => Dedup.exactIndexCompact(s, exDir),
         () => Dedup.minhashIndexCompact(s, mhDir),
         () => Dedup.simhashIndexCompact(s, shDir),
         () => Similarity.ivfCompact(s, ivfDir),
         () => Similarity.ivfPqCompact(s, pqDir),
-        () => operators.Clustering.semDedupStateCompact(s, semDir))
+        () => operators.Clustering.semDedupStateCompact(s, semDir)))(_())
       val folded = audit("3_folded", statuses)
       (before ++ deleted ++ folded)
         .toDF("family", "phase", "delete_status", "keys_live",
           "expected_residue", "deleted_pending", "complete")
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
     }
+    }
+
+  /** q260/q262's planted admission fixture: (base docs, benchmark
+    * suite, base embeddings, batch). The batch carries one doc per
+    * rejection mode — a clean doc (11), a token-reordered copy of base
+    * doc 1 (12), a semantic near-dup with unique text (13: cosine 0.994
+    * against base id 2's axis-1 vector), an exact copy of base doc 1
+    * (14) and a benchmark-contaminated doc (15). */
+  private def admissionFixture(s: SparkSession)
+    : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    import s.implicits._
+    val b1 = "alpha beta gamma delta epsilon zeta eta theta"
+    val base = Seq(
+      1L -> b1,
+      2L -> "one red two green three blue four yellow",
+      3L -> "north wind and bright sun argued loudly today",
+      4L -> "copper iron silver gold tin lead zinc nickel")
+      .toDF("id", "text").repartition(1)
+    val bench = Seq(100L ->
+      "secret evaluation question regarding ancient sphinxes forever")
+      .toDF("id", "text").repartition(1)
+    val baseVecs = (1 to 4).map(i => (i.toLong, axis(i - 1)))
+      .toDF("id", "vec")
+    val nearVec = {
+      val a = new Array[Double](8); a(0) = 0.1; a(1) = 0.9; a.toSeq
+    }
+    val batch = Seq(
+      (11L, "my own five clean unique words here", axis(4)),
+      (12L, "theta eta zeta epsilon delta gamma beta alpha", axis(5)),
+      (13L, "completely novel sentence about nothing shared anywhere",
+        nearVec),
+      (14L, b1, axis(6)),
+      (15L, "please answer this secret evaluation question regarding " +
+        "ancient sphinxes", axis(7)))
+      .toDF("id", "text", "vec").repartition(1)
+    (base, bench, baseVecs, batch)
+  }
 
   /** UNIFIED seven-family admission
     * ([[operators.CorpusPipeline.admitBatch]]'s optional SimHash +
@@ -4279,63 +4127,22 @@ object SparkEntry {
     * contract extends to both new stages (intra-batch semantic pairs
     * are excluded by construction). */
   def q260_fleet_admission(s: SparkSession, d: String): DataFrame =
-    fixtureTuned(s) {
-    import s.implicits._
-    val b1 = "alpha beta gamma delta epsilon zeta eta theta"
-    val base = Seq(
-      1L -> b1,
-      2L -> "one red two green three blue four yellow",
-      3L -> "north wind and bright sun argued loudly today",
-      4L -> "copper iron silver gold tin lead zinc nickel")
-      .toDF("id", "text").repartition(1)
-    val bench = Seq(100L ->
-      "secret evaluation question regarding ancient sphinxes forever")
-      .toDF("id", "text").repartition(1)
-    def axis(dim: Int): Seq[Double] = {
-      val a = new Array[Double](8); a(dim) = 1.0; a.toSeq
-    }
-    val baseVecs = (1 to 4).map(i => (i.toLong, axis(i - 1)))
-      .toDF("id", "vec")
-    val nearVec = { // 0.994 cosine against base id 2's axis-1 vector
-      val a = new Array[Double](8); a(0) = 0.1; a(1) = 0.9; a.toSeq
-    }
-    val batch = Seq(
-      (11L, "my own five clean unique words here", axis(4)),
-      (12L, "theta eta zeta epsilon delta gamma beta alpha", axis(5)),
-      (13L, "completely novel sentence about nothing shared anywhere",
-        nearVec),
-      (14L, b1, axis(6)),
-      (15L, "please answer this secret evaluation question regarding " +
-        "ancient sphinxes", axis(7)))
-      .toDF("id", "text", "vec").repartition(1)
-    val dirs = Seq("q260_ex_", "q260_mh_", "q260_sh_", "q260_sem_",
-      "q260_dc_").map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, mhDir, shDir, semDir, dcDir) =
-        dirs.map(_.getAbsolutePath)
+    withConfs(s, FixtureConfs) {
+    val (base, bench, baseVecs, batch) = admissionFixture(s)
+    TempDirs.scoped("q260_ex_", "q260_mh_", "q260_sh_", "q260_sem_",
+      "q260_dc_") { case Seq(exDir, mhDir, shDir, semDir, dcDir) =>
       // five independent writer-lock domains — build concurrently
-      // (q254's inParallel rationale)
-      inParallel(
-        () => Dedup.exactIndexBuild(base, exDir, "id", "text"),
-        () => Dedup.minhashIndexBuild(base, mhDir, "id", "text"),
+      Parallel.fleetMap(admissionIndexBuilds(base, bench, exDir, mhDir,
+        dcDir, "id") ++ Seq(
         () => Dedup.simhashIndexBuild(base, shDir, "id", "text"),
-        () => {
-          val (labels, cents) = operators.Clustering
-            .kmeansWithCentroids(baseVecs, "id", "vec", k = 2,
-              iterations = 2)
-          operators.Clustering.semDedupStateSave(s, semDir, labels,
-            "id", cents)
-          operators.Clustering.releasePairs(labels)
-        },
-        () => Decontamination.decontamIndexBuild(bench, dcDir, "text",
-          n = 3))
+        () => semStateBuild(s, semDir, baseVecs, "id", "vec", k = 2)))(_())
       operators.CorpusPipeline.admitBatch(s, batch, exDir, mhDir,
         dcDir, base, "id", "text", minTokens = 5, threshold = 0.5,
         simhashDir = Some(shDir), maxHamming = 0,
         semDedupDir = Some(semDir), baseVecs = Some(baseVecs),
         vecCol = "vec", tau = 0.95)
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
     }
 
   /** The ONE-CALL fleet maintenance loop
@@ -4355,27 +4162,17 @@ object SparkEntry {
     * each (family, action, status, action_after) row a structural
     * fact of the constructed states. */
   def q261_fleet_loop(s: SparkSession, d: String): DataFrame =
-    fixtureTuned(s) {
+    withConfs(s, FixtureConfs) {
     import s.implicits._
-    val texts = Seq(
-      0L -> "the quick brown fox jumps over the lazy dog",
-      1L -> "pack my box with five dozen liquor jugs",
-      2L -> "how vexingly quick daft zebras jump")
-    val docs = texts.toDF("id", "text").repartition(1)
+    val docs = Pangrams.take(3).toDF("id", "text").repartition(1)
     val bench = Seq(100L ->
       "secret evaluation question regarding ancient sphinxes")
       .toDF("id", "text").repartition(1)
-    def pt(dim: Int): Seq[Double] = {
-      val a = new Array[Double](4); a(dim) = 1.0; a.toSeq
-    }
-    val vecs = (0 until 4).map(c => (c.toLong, pt(c % 2)))
+    val vecs = (0 until 4).map(c => (c.toLong, axis(c % 2, 4)))
       .toDF("id", "vec")
-    val dirs = Seq("q261_ex_", "q261_sh_", "q261_sem_", "q261_dc_",
-      "q261_fn_").map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, shDir, semDir, dcDir, fnDir) =
-        dirs.map(_.getAbsolutePath)
-      inParallel(
+    TempDirs.scoped("q261_ex_", "q261_sh_", "q261_sem_", "q261_dc_",
+      "q261_fn_") { case Seq(exDir, shDir, semDir, dcDir, fnDir) =>
+      Parallel.fleetMap(Seq[() => Unit](
         () => Dedup.exactIndexBuild(docs, exDir, "id", "text"),
         () => {
           Dedup.simhashIndexBuild(docs.filter(col("id") === 0L),
@@ -4397,7 +4194,7 @@ object SparkEntry {
           .foreach(day => operators.CorpusPipeline
             .admissionFunnelAppend(s, fnDir, day,
               Seq(("s1", 4L, 0L)).toDF("source", "n_docs",
-                "n_neardup"))))
+                "n_neardup")))))(_())
       Dedup.exactIndexDelete(s, exDir,
         docs.filter(col("id") === 1L), "id", "text")
       val fleet = Seq(exDir, shDir, semDir, dcDir, fnDir)
@@ -4419,7 +4216,7 @@ object SparkEntry {
           report(r.getString(2)), r.getString(3))).toSeq.sortBy(_._1)
         .toDF("family", "action", "status", "action_after")
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
     }
 
   /** STREAMING unified seven-family admission
@@ -4439,60 +4236,21 @@ object SparkEntry {
     * verdicts exactly; the mirror is those constants × both
     * cadences. */
   def q262_streaming_unified_admission(s: SparkSession, d: String)
-    : DataFrame = fixtureTuned(s) {
-    import s.implicits._
-    val b1 = "alpha beta gamma delta epsilon zeta eta theta"
-    val base = Seq(
-      1L -> b1,
-      2L -> "one red two green three blue four yellow",
-      3L -> "north wind and bright sun argued loudly today",
-      4L -> "copper iron silver gold tin lead zinc nickel")
-      .toDF("id", "text").repartition(1)
-    val bench = Seq(100L ->
-      "secret evaluation question regarding ancient sphinxes forever")
-      .toDF("id", "text").repartition(1)
-    def axis(dim: Int): Seq[Double] = {
-      val a = new Array[Double](8); a(dim) = 1.0; a.toSeq
-    }
-    val baseVecs = (1 to 4).map(i => (i.toLong, axis(i - 1)))
-      .toDF("id", "vec")
-    val nearVec = {
-      val a = new Array[Double](8); a(0) = 0.1; a(1) = 0.9; a.toSeq
-    }
-    val batch = Seq(
-      (11L, "my own five clean unique words here", axis(4)),
-      (12L, "theta eta zeta epsilon delta gamma beta alpha", axis(5)),
-      (13L, "completely novel sentence about nothing shared anywhere",
-        nearVec),
-      (14L, b1, axis(6)),
-      (15L, "please answer this secret evaluation question regarding " +
-        "ancient sphinxes", axis(7)))
-      .toDF("id", "text", "vec").repartition(1)
-    val dirs = Seq("q262_ex_", "q262_mh_", "q262_sh_", "q262_sem_",
-      "q262_dc_", "q262_stage_", "q262_out1_", "q262_ck1_",
-      "q262_out2_", "q262_ck2_").map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, mhDir, shDir, semDir, dcDir, stageDir, out1, ck1,
-        out2, ck2) = dirs.map(_.getAbsolutePath)
+    : DataFrame = withConfs(s, FixtureConfs) {
+    val (base, bench, baseVecs, batch) = admissionFixture(s)
+    TempDirs.scoped("q262_ex_", "q262_mh_", "q262_sh_", "q262_sem_", "q262_dc_",
+      "q262_stage_", "q262_out1_", "q262_ck1_", "q262_out2_",
+      "q262_ck2_") { case Seq(exDir, mhDir, shDir, semDir, dcDir, stageDir,
+        out1, ck1, out2, ck2) =>
       // six independent destinations (five writer-lock domains + the
-      // staging dir) — build concurrently (q254's inParallel rationale;
-      // q209/q251's file-source convention for the staged batch: a
-      // distributed multi-file parquet write, never the driver)
-      inParallel(
-        () => Dedup.exactIndexBuild(base, exDir, "id", "text"),
-        () => Dedup.minhashIndexBuild(base, mhDir, "id", "text"),
+      // staging dir) — build concurrently (q209/q251's file-source
+      // convention for the staged batch: a distributed multi-file
+      // parquet write, never the driver)
+      Parallel.fleetMap(admissionIndexBuilds(base, bench, exDir, mhDir,
+        dcDir, "id") ++ Seq(
         () => Dedup.simhashIndexBuild(base, shDir, "id", "text"),
-        () => {
-          val (labels, cents) = operators.Clustering
-            .kmeansWithCentroids(baseVecs, "id", "vec", k = 2,
-              iterations = 2)
-          operators.Clustering.semDedupStateSave(s, semDir, labels,
-            "id", cents)
-          operators.Clustering.releasePairs(labels)
-        },
-        () => Decontamination.decontamIndexBuild(bench, dcDir, "text",
-          n = 3),
-        () => batch.repartition(3).write.parquet(stageDir))
+        () => semStateBuild(s, semDir, baseVecs, "id", "vec", k = 2),
+        () => batch.repartition(3).write.parquet(stageDir)))(_())
       def start(filesPerTrigger: Int, outDir: String, ckptDir: String)
         : org.apache.spark.sql.streaming.StreamingQuery = {
         val stream = s.readStream
@@ -4519,7 +4277,7 @@ object SparkEntry {
         .unionByName(
           s.read.parquet(out2).withColumn("cadence", lit(3L)))
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
     }
 
   /** Fleet RUNBOOK lifecycle ([[operators.FleetRunbook]] +
@@ -4543,7 +4301,7 @@ object SparkEntry {
     * two, one fresh file per list. All structural facts of the
     * constructed states. */
   def q263_fleet_runbook(s: SparkSession, d: String): DataFrame =
-    fixtureTuned(s) {
+    withConfs(s, FixtureConfs) {
     import s.implicits._
     val pts: Seq[Seq[Double]] = Seq(
       Seq(1.0, 0.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0, 0.0),
@@ -4553,26 +4311,16 @@ object SparkEntry {
       .toDF("vid", "embedding")
     val fvecs = pts.zipWithIndex.map { case (p, i) =>
       (i.toLong, p.map(_.toFloat).toArray) }.toDF("id", "v")
-    val dirs = Seq("q263_sem_", "q263_pq_", "q263_store_", "q263_rb_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(semDir, pqDir, storeDir, rbDir) =
-        dirs.map(_.getAbsolutePath)
-      // four independent destinations — build concurrently (q254's
-      // inParallel rationale). SemDeDup state frozen at k=1: every
-      // vector in one cluster — the quantizer has "fallen behind" by
-      // construction; the IVF-PQ gets two append fragments on top of
-      // the fresh build; ONE persisted embedding store serves both
-      // runbook rows (foreign column names exercise the rename path)
-      inParallel(
-        () => {
-          val (labels, cents) = operators.Clustering
-            .kmeansWithCentroids(dvecs, "vid", "embedding", k = 1,
-              iterations = 2)
-          operators.Clustering.semDedupStateSave(s, semDir, labels,
-            "vid", cents)
-          operators.Clustering.releasePairs(labels)
-        },
+    TempDirs.scoped("q263_sem_", "q263_pq_", "q263_store_",
+      "q263_rb_") { case Seq(semDir, pqDir, storeDir, rbDir) =>
+      // four independent destinations — build concurrently. SemDeDup
+      // state frozen at k=1: every vector in one cluster — the
+      // quantizer has "fallen behind" by construction; the IVF-PQ gets
+      // two append fragments on top of the fresh build; ONE persisted
+      // embedding store serves both runbook rows (foreign column names
+      // exercise the rename path)
+      Parallel.fleetMap(Seq[() => Unit](
+        () => semStateBuild(s, semDir, dvecs, "vid", "embedding", k = 1),
         () => {
           Similarity.ivfPqBuild(fvecs.filter(col("id") < 4), pqDir,
             nList = 2, m = 2, nCodes = 2)
@@ -4585,7 +4333,7 @@ object SparkEntry {
           (pqDir, storeDir, "vid", "embedding",
             Option.empty[Long]))
           .toDF("dir", "side_input_path", "id_col", "payload_col",
-            "target_cluster_size")))
+            "target_cluster_size"))))(_())
       val fleet = Seq(semDir, pqDir)
       def plan() = Similarity.indexMaintenancePlan(
         Similarity.fleetHealth(s, fleet, hotClusterCap = 2),
@@ -4611,7 +4359,7 @@ object SparkEntry {
           report(r.getString(2)), r.getString(3))).toSeq.sortBy(_._1)
         .toDF("family", "action", "status", "action_after")
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
     }
 
   /** BUDGETED deep recall sweeps in the fleet loop
@@ -4635,11 +4383,8 @@ object SparkEntry {
     * structural facts of the constructed geometry (distinct cosines —
     * no tie-dependent top-k). */
   def q264_fleet_deep_probe(s: SparkSession, d: String): DataFrame =
-    fixtureTuned(s) {
+    withConfs(s, FixtureConfs) {
     import s.implicits._
-    def ang(deg: Double): Array[Float] = Array(
-      math.cos(math.toRadians(deg)).toFloat,
-      math.sin(math.toRadians(deg)).toFloat)
     val bases = Seq((0L, ang(0.0)), (1L, ang(90.0))).toDF("id", "v")
     val straddlers = ((0 until 8).map(i =>
       (10L + i, ang(44.1 + 0.1 * i))) ++
@@ -4654,20 +4399,18 @@ object SparkEntry {
       .toDF("id", "v")
     val queries = Seq((0L, ang(44.9))).toDF("qid", "qv")
     val hQueries = Seq((0L, ang(11.0))).toDF("qid", "qv")
-    val dirs = Seq("q264_a_", "q264_b_", "q264_log_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(aDir, bDir, logDir) = dirs.map(_.getAbsolutePath)
+    TempDirs.scoped("q264_a_", "q264_b_", "q264_log_") { case Seq(aDir, bDir,
+        logDir) =>
       // two independent writer-lock domains — build concurrently
-      // (q254's inParallel rationale; A's append stays ordered after
+      // (A's append stays ordered after
       // its build inside the closure)
-      inParallel(
+      Parallel.fleetMap(Seq[() => Unit](
         () => {
           Similarity.ivfBuild(bases, aDir, nList = 2, kmeansMaxIter = 2)
           Similarity.ivfAppend(s, aDir, straddlers)
         },
         () => Similarity.ivfBuild(healthy, bDir, nList = 2,
-          kmeansMaxIter = 2))
+          kmeansMaxIter = 2)))(_())
       val fleet = Seq(aDir, bDir)
       val tag = Map(aDir -> "A", bDir -> "B")
       def sweep(): Seq[(String, String, Boolean, String)] = {
@@ -4695,7 +4438,7 @@ object SparkEntry {
       (s1 ++ applyRow ++ s2 ++ s3 ++ probeCounts)
         .toDF("step", "tag", "deep_probed", "outcome")
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
     }
 
   /** The fully UNATTENDED fleet ops loop — the round's capstone
@@ -4726,11 +4469,8 @@ object SparkEntry {
     * cross the top-12 boundary — the excluded tail is always the
     * unique farthest base/straddler). */
   def q265_fleet_ops_loop(s: SparkSession, d: String): DataFrame =
-    fixtureTuned(s) {
+    withConfs(s, FixtureConfs) {
     import s.implicits._
-    def ang(deg: Double): Array[Float] = Array(
-      math.cos(math.toRadians(deg)).toFloat,
-      math.sin(math.toRadians(deg)).toFloat)
     val bases = Seq((0L, ang(0.0)), (1L, ang(90.0)))
     val straddlers = (0 until 8).map(i =>
       (10L + i, ang(44.1 + 0.1 * i))) ++
@@ -4745,32 +4485,21 @@ object SparkEntry {
     val texts = Seq(0L -> "alpha beta", 1L -> "gamma delta",
       2L -> "epsilon zeta", 3L -> "eta theta", 4L -> "iota kappa",
       5L -> "lambda mu")
-    val dirs = Seq("q265_ivf_", "q265_sem_", "q265_ex_", "q265_sa_",
-      "q265_sb_", "q265_rb_", "q265_log_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(ivfDir, semDir, exDir, storeA, storeB, rbDir, logDir) =
-        dirs.map(_.getAbsolutePath)
+    TempDirs.scoped("q265_ivf_", "q265_sem_", "q265_ex_", "q265_sa_",
+      "q265_sb_", "q265_rb_", "q265_log_") { case Seq(ivfDir, semDir, exDir,
+        storeA, storeB, rbDir, logDir) =>
       val dvecs = semPts.zipWithIndex.map { case (p, i) =>
         (i.toLong, p) }.toDF("vid", "embedding")
-      // six independent destinations — build concurrently (q254's
-      // inParallel rationale; the runbook holds BOTH stores under
-      // foreign column names: the loop's only configuration, written
-      // once)
-      inParallel(
+      // six independent destinations — build concurrently (the
+      // runbook holds BOTH stores under foreign column names: the
+      // loop's only configuration, written once)
+      Parallel.fleetMap(Seq[() => Unit](
         () => {
           Similarity.ivfBuild(bases.toDF("id", "v"), ivfDir, nList = 2,
             kmeansMaxIter = 2)
           Similarity.ivfAppend(s, ivfDir, straddlers.toDF("id", "v"))
         },
-        () => {
-          val (labels, cents) = operators.Clustering
-            .kmeansWithCentroids(dvecs, "vid", "embedding", k = 1,
-              iterations = 2)
-          operators.Clustering.semDedupStateSave(s, semDir, labels,
-            "vid", cents)
-          operators.Clustering.releasePairs(labels)
-        },
+        () => semStateBuild(s, semDir, dvecs, "vid", "embedding", k = 1),
         () => {
           Dedup.exactIndexBuild(texts.take(1).toDF("id", "text"), exDir,
             "id", "text")
@@ -4784,7 +4513,7 @@ object SparkEntry {
           (ivfDir, storeA, "vid", "emb", Option.empty[Long]),
           (semDir, storeB, "vid", "embedding", Some(2L)))
           .toDF("dir", "side_input_path", "id_col", "payload_col",
-            "target_cluster_size")))
+            "target_cluster_size"))))(_())
       val fleet = Seq(ivfDir, semDir, exDir)
       val tag = Map(ivfDir -> "A", semDir -> "B", exDir -> "C")
       def sweep(step: String): (DataFrame,
@@ -4816,7 +4545,7 @@ object SparkEntry {
       (s1 ++ applied ++ s2 ++ probeCounts)
         .toDF("step", "tag", "deep_probed", "outcome")
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
     }
 
   /** Fleet BACKUP/RESTORE lifecycle ([[operators.Similarity.fleetClone]]
@@ -4833,36 +4562,27 @@ object SparkEntry {
     * backup, which answers like the original. All structural facts of
     * the constructed states. */
   def q266_fleet_backup_restore(s: SparkSession, d: String): DataFrame =
-    fixtureTuned(s) {
+    withConfs(s, FixtureConfs) {
     import s.implicits._
-    def ang(deg: Double): Array[Float] = Array(
-      math.cos(math.toRadians(deg)).toFloat,
-      math.sin(math.toRadians(deg)).toFloat)
-    val texts = Seq(0L -> "the quick brown fox jumps over the lazy dog",
-      1L -> "pack my box with five dozen liquor jugs")
-      .toDF("id", "text").repartition(1)
+    val texts = Pangrams.take(2).toDF("id", "text").repartition(1)
     val vecs = ((0 until 6).map(i => (i.toLong, ang(10.0 + i))) ++
       (0 until 6).map(i => (10L + i, ang(80.0 + i)))).toDF("id", "v")
-    val dirs = Seq("q266_src_", "q266_bak_", "q266_res_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(srcRoot, bakRoot, resRoot) = dirs.map(_.getAbsolutePath)
+    TempDirs.scoped("q266_src_", "q266_bak_", "q266_res_") { case Seq(srcRoot,
+        bakRoot, resRoot) =>
       val exDir = s"$srcRoot/ex"; val mhDir = s"$srcRoot/mh"
       val ivfDir = s"$srcRoot/ivf"
       // three independent writer-lock domains — build concurrently
-      // (q254's inParallel rationale)
-      inParallel(
+      Parallel.fleetMap(Seq[() => Unit](
         () => Dedup.exactIndexBuild(texts, exDir, "id", "text"),
         () => Dedup.minhashIndexBuild(texts, mhDir, "id", "text"),
         () => Similarity.ivfBuild(vecs, ivfDir, nList = 2,
-          kmeansMaxIter = 2))
+          kmeansMaxIter = 2)))(_())
       val backup = Similarity.fleetClone(s, Seq(exDir, mhDir, ivfDir),
         bakRoot, parallelism = 3)
         .select("family", "status").collect()
         .map(r => ("1_backup", r.getString(0), r.getString(1)))
         .toSeq.sortBy(_._2)
-      val probeText = Seq(9L ->
-        "the quick brown fox jumps over the lazy dog").toDF("id", "text")
+      val probeText = Seq(9L -> Pangrams(0)._2).toDF("id", "text")
       def exDup(dir: String): Boolean = exDup2(s, dir, probeText)
       val q = Seq((0L, ang(11.0))).toDF("qid", "qv")
       def top(dir: String): Set[Long] =
@@ -4875,8 +4595,7 @@ object SparkEntry {
           (top(s"$bakRoot/ivf") == top(ivfDir)).toString))
       // the backup is a SNAPSHOT: a post-backup source append never
       // reaches it
-      val newDoc = Seq(7L -> "sphinx of black quartz judge my vow")
-        .toDF("id", "text")
+      val newDoc = Seq(7L -> Pangrams(3)._2).toDF("id", "text")
       Dedup.exactIndexAppend(s, exDir, newDoc, "id", "text")
       val probeNew = newDoc.select(col("id") + 100, col("text"))
         .toDF("id", "text")
@@ -4892,7 +4611,7 @@ object SparkEntry {
       (backup ++ verify ++ drift ++ restore)
         .toDF("step", "family", "outcome")
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
     }
 
   private def exDup2(s: SparkSession,
@@ -4914,9 +4633,7 @@ object SparkEntry {
     val emb = T.embeddings(s, d)
     val base = emb.filter(col("vec_id") % 10 < 8)
     val day1 = emb.filter(col("vec_id") % 10 === 8)
-    val stage = graft.util.TempDirs.fresh("q245_semhealth_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.scoped("q245_semhealth_") { case Seq(root) =>
       val (labels, centroids) = operators.Clustering.kmeansWithCentroids(
         base, "vec_id", "embedding", k = 16, iterations = 2)
       operators.Clustering.semDedupStateSave(s, root, labels, "vec_id",
@@ -4929,7 +4646,7 @@ object SparkEntry {
         .select("n_clusters", "total_rows", "occupied_clusters",
           "max_cluster", "hot_clusters")
         .localCheckpoint()
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** Health report of a persisted decontamination index
@@ -4944,9 +4661,7 @@ object SparkEntry {
   def q246_decontam_health(s: SparkSession, d: String): DataFrame = {
     val docs = T.documents(s, d)
     val bench = docs.filter(col("source") === "src0")
-    val stage = graft.util.TempDirs.fresh("q246_dchealth_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.scoped("q246_dchealth_") { case Seq(root) =>
       Decontamination.decontamIndexBuild(
         bench.filter(pmod(col("doc_id"), lit(2L)) === 0), root,
         "text", n = 3)
@@ -4955,7 +4670,7 @@ object SparkEntry {
       Decontamination.decontamIndexHealth(s, root)
         .select("shingle_n", "total_rows", "distinct_shingles")
         .localCheckpoint()
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** WHOLE-fleet maintenance plan: ONE
@@ -4972,38 +4687,28 @@ object SparkEntry {
     * family's rule — the q234/q239 pattern completed across all SEVEN
     * persisted families. All verdicts are structural facts of the
     * constructed states. */
-  def q247_fleet_all_families(s: SparkSession, d: String): DataFrame = fixtureTuned(s) {
+  def q247_fleet_all_families(s: SparkSession, d: String): DataFrame =
+    withConfs(s, FixtureConfs) {
     import s.implicits._
-    def v8(dim: Int): Array[Float] = {
-      val a = new Array[Float](8); a(dim) = 1.0f; a
-    }
-    val ivfCorpus = (0 until 4).map(c => (c.toLong, v8(c)))
+    val ivfCorpus = (0 until 4).map(c => (c.toLong, oneHot(c)))
       .toDF("id", "v")
-    val drifted = (0 until 4).map(c => (100L + c, v8(4 + c)))
+    val drifted = (0 until 4).map(c => (100L + c, oneHot(4 + c)))
       .toDF("id", "v")
-    val boiler = "all work and no play makes jack a dull boy"
-    val hotDocs = (0L until 8L).map(i => (i, boiler))
+    val hotDocs = (0L until 8L).map(i => (i, Boiler))
       .toDF("id", "text").repartition(1)
-    val texts = Seq(
-      0L -> "the quick brown fox jumps over the lazy dog",
-      1L -> "pack my box with five dozen liquor jugs",
-      2L -> "how vexingly quick daft zebras jump",
-      3L -> "sphinx of black quartz judge my vow")
-    val fragDocs = texts.toDF("id", "text").repartition(1)
+    val fragDocs = Pangrams.toDF("id", "text").repartition(1)
     // one 3-member embedding cluster over a cap of 2 -> hot_clusters=1
     val semVecs = Seq(
       (0L, Array(1.0f, 0.0f)), (1L, Array(0.99f, 0.01f)),
       (2L, Array(0.98f, 0.02f)), (3L, Array(0.0f, 1.0f)))
       .toDF("vec_id", "embedding")
-    val dirs = Seq("q247_ivf_", "q247_mh_", "q247_sh_", "q247_sem_",
-      "q247_dc_", "q247_ex_").map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(ivfDir, mhDir, shDir, semDir, dcDir, exDir) =
-        dirs.map(_.getAbsolutePath)
+    TempDirs.scoped("q247_ivf_", "q247_mh_", "q247_sh_", "q247_sem_",
+      "q247_dc_", "q247_ex_") { case Seq(ivfDir, mhDir, shDir, semDir, dcDir,
+        exDir) =>
       // seven independent writer-lock domains: build each family's
       // planted state concurrently (intra-family append order kept
-      // inside its closure) — q254's inParallel rationale
-      inParallel(
+      // inside its closure)
+      Parallel.fleetMap(Seq[() => Unit](
         () => Similarity.ivfBuild(ivfCorpus, ivfDir, nList = 4,
           kmeansMaxIter = 10),
         () => Dedup.minhashIndexBuild(hotDocs, mhDir, "id", "text"),
@@ -5013,14 +4718,8 @@ object SparkEntry {
           (2L until 4L).foreach(i => Dedup.simhashIndexAppend(s, shDir,
             fragDocs.filter(col("id") === i), "id", "text"))
         },
-        () => {
-          val (labels, centroids) = operators.Clustering
-            .kmeansWithCentroids(semVecs, "vec_id", "embedding", k = 2,
-              iterations = 2)
-          operators.Clustering.semDedupStateSave(s, semDir, labels,
-            "vec_id", centroids)
-          operators.Clustering.releasePairs(labels)
-        },
+        () => semStateBuild(s, semDir, semVecs, "vec_id", "embedding",
+          k = 2),
         () => Decontamination.decontamIndexBuild(
           fragDocs.select(col("id").as("doc_id"), col("text")), dcDir,
           "text", n = 3),
@@ -5029,31 +4728,26 @@ object SparkEntry {
             "id", "text")
           (1L until 4L).foreach(i => Dedup.exactIndexAppend(s, exDir,
             fragDocs.filter(col("id") === i), "id", "text"))
-        })
-      val fleet = Similarity
-        .ivfIndexHealth(s, ivfDir,
-          ivfCorpus.select(col("id").as("qid"), col("v").as("qv")),
-          k = 1, nProbe = 4).withColumn("idx", lit(1))
+        }))(_())
+      // one health row per family (the IVF index takes the fleet's one
+      // deep recall probe) plus the IVF drift row as idx 2
+      val idx = typedLit(Map(ivfDir -> 1, mhDir -> 3, shDir -> 4,
+        semDir -> 5, dcDir -> 6, exDir -> 7))
+      val fleet = Similarity.fleetHealth(s,
+        Seq(ivfDir, mhDir, shDir, semDir, dcDir, exDir),
+        hotBucketCap = 5, hotClusterCap = 2, deepProbes = 1,
+        probeQueries = Map(ivfDir ->
+          ivfCorpus.select(col("id").as("qid"), col("v").as("qv"))),
+        probeK = 1, probeNProbe = 4)
+        .withColumn("idx", idx(col("dir")))
         .unionByName(Similarity.ivfDriftProbe(s, ivfDir, drifted)
           .withColumn("idx", lit(2)), allowMissingColumns = true)
-        .unionByName(Dedup.minhashIndexHealth(s, mhDir,
-          hotBucketCap = 5).withColumn("idx", lit(3)),
-          allowMissingColumns = true)
-        .unionByName(Dedup.simhashIndexHealth(s, shDir)
-          .withColumn("idx", lit(4)), allowMissingColumns = true)
-        .unionByName(operators.Clustering.semDedupStateHealth(s, semDir,
-          hotClusterCap = 2).withColumn("idx", lit(5)),
-          allowMissingColumns = true)
-        .unionByName(Decontamination.decontamIndexHealth(s, dcDir)
-          .withColumn("idx", lit(6)), allowMissingColumns = true)
-        .unionByName(Dedup.exactIndexHealth(s, exDir)
-          .withColumn("idx", lit(7)), allowMissingColumns = true)
       Similarity.indexMaintenancePlan(fleet, recallFloor = 0.9,
         maxFilesPerListCeiling = 10, maxFragmentsCeiling = 2,
         driftRatioFloor = 0.5, hotClustersCeiling = 0L)
         .select(col("idx"), col("action"))
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** BPE corpus-ENCODING gate ([[operators.Tokenizer.bpeEncode]]): the

@@ -8,7 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * write the score sink with the output-file limit.
   *
   * Arguments: input-dirs/input-dir, model-dir, output-dir, model-id,
-  * output-files-limit, plus the column-mapping args of
+  * output-files-limit, evaluator (an [[graft.ml.Evaluators.byName]]
+  * name; logged next to the scores), plus the column-mapping args of
   * [[GameTrainingDriver.prepare]] (the scored data must carry the same
   * feature and random-effect columns the model was trained with).
   */
@@ -22,6 +23,8 @@ object GameScoringDriver {
 
   def run(spark: SparkSession, a: Args): DataFrame = {
     import spark.implicits._
+    val evaluator = a.opt("evaluator")
+      .map(m => m -> graft.ml.Evaluators.byName(m))
     val input = GameTrainingDriver.readInputs(spark, a,
       a.list("input-dirs") match {
         case Nil => Seq(a.str("input-dir")); case ds => ds
@@ -35,14 +38,9 @@ object GameScoringDriver {
       // when labels ride along, log the evaluation next to the scores
       // (reference GameScoringDriver evaluates when validation data has
       // a response column)
-      a.opt("evaluator").foreach { metric =>
+      evaluator.foreach { case (metric, eval) =>
         val scored = prepared.select($"uid", $"label").join(scores, "uid")
-        val value = metric match {
-          case "auc" => graft.ml.Evaluators.auc(scored, "score", "label")
-          case "rmse" => graft.ml.Evaluators.rmse(scored, "score", "label")
-          case _ =>
-            graft.ml.Evaluators.logisticLoss(scored, "score", "label")
-        }
+        val value = eval(scored, "score", "label", None)
         Seq((metric, value)).toDF("metric", "value")
           .coalesce(1).write.mode("overwrite").json(s"$out-metrics")
       }

@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
   *   random-coordinates name:reIdCol[:cap[:low]]  per-entity intercepts
   *   loss, lambdas, iterations, max-iter, tol     optimization
   *   normalization none|standardization|scale_std
-  *   evaluator rmse|auc, validate full|sample|none
+  *   evaluator rmse|auc|logistic|poisson|smoothed_hinge
+  *   validate full|sample|none
   *   tuning none|random|bayesian, tuning-iters, tuning-min, tuning-max
   *   variance none|simple|full, sparsity-threshold
   *   prior-model-dir, incremental-weight          incremental training
@@ -39,6 +40,8 @@ object GameTrainingDriver {
   }
 
   def run(spark: SparkSession, a: Args): (GameModel, Seq[Evaluated]) = {
+    val metricName = a.str("evaluator", "rmse")
+    val evaluator = Evaluators.byName(metricName)
     val train = readInputs(spark, a, a.list("input-dirs") match {
       case Nil => Seq(a.str("input-dir"))
       case ds => ds
@@ -67,7 +70,6 @@ object GameTrainingDriver {
     // production validation sizes the scope is a no-op
     // ([[graft.util.ExecProfile.withDerivedShuffle]]).
     val validationRows = validationDf.map(_.count())
-    val metricName = a.str("evaluator", "rmse")
 
     def cfgFor(lambda: Double): GlmConfig = {
       val base = GlmConfig(loss, l2 = lambda,
@@ -122,10 +124,7 @@ object GameTrainingDriver {
           codegenOff = true) {
           val scored = v.select(col("uid"), col("label"))
             .join(model.score(v), "uid")
-          metricName match {
-            case "auc" => Evaluators.auc(scored, "score", "label")
-            case _ => Evaluators.rmse(scored, "score", "label")
-          }
+          evaluator(scored, "score", "label", None)
         }
     }
 

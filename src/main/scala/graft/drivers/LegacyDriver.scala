@@ -25,6 +25,8 @@ object LegacyDriver {
   def run(spark: SparkSession, a: Args)
   : (Map[Double, GlmModel], Double) = {
     import spark.implicits._
+    val metricName = a.str("evaluator", "logistic")
+    val evaluator = Evaluators.byName(metricName)
     val prepared = GameTrainingDriver.prepare(
       GameTrainingDriver.readInputs(spark, a, Seq(a.str("input-dir"))), a)
     GameTrainingDriver.validate(prepared, a)
@@ -83,7 +85,6 @@ object LegacyDriver {
         Glm.regularizationPath(ds, featureDim, cfg, lambdas)
     }
 
-    val metricName = a.str("evaluator", "logistic")
     val valDs = a.opt("validation-dir").map(d =>
       GameTrainingDriver.prepare(spark.read.parquet(d), a))
     def metric(m: GlmModel): Double = valDs match {
@@ -93,13 +94,7 @@ object LegacyDriver {
         // rows carry their training weights (prepare() defaults both)
         val scored = Glm.score(v, m, "features")
           .withColumn("score", col("score") + col("offset"))
-        metricName match {
-          case "auc" => Evaluators.auc(scored, "score", "label")
-          case "rmse" =>
-            Evaluators.rmse(scored, "score", "label", Some("weight"))
-          case _ =>
-            Evaluators.logisticLoss(scored, "score", "label", Some("weight"))
-        }
+        evaluator(scored, "score", "label", Some("weight"))
     }
     val evaluated = models.map { case (l, m) => l -> metric(m) }
     val bestLambda =

@@ -66,6 +66,25 @@ object Evaluators {
     df.agg(sum(w(weightCol) * l)).first().getDouble(0)
   }
 
+  private val names =
+    Seq("rmse", "auc", "logistic", "poisson", "smoothed_hinge")
+
+  /** The drivers' one `--evaluator` dispatch: the metric named `name`
+    * as a function of (scored frame, score column, label column,
+    * optional weight column); `auc` ignores the weight. An unknown
+    * name throws IllegalArgumentException, so a driver resolves its
+    * evaluator before it trains. */
+  def byName(name: String)
+    : (DataFrame, String, String, Option[String]) => Double = name match {
+    case "rmse" => rmse
+    case "auc" => (df, score, label, _) => auc(df, score, label)
+    case "logistic" => logisticLoss
+    case "poisson" => poissonLoss
+    case "smoothed_hinge" => smoothedHingeLoss
+    case other => throw new IllegalArgumentException(
+      s"unknown evaluator '$other'; expected one of ${names.mkString(", ")}")
+  }
+
   // ------------------------------------------------ distributed rank math
   //
   // Global rank statistics (AUC/AUPR/peak-F1 over the WHOLE dataset) must
@@ -239,13 +258,6 @@ object Evaluators {
             (col("__p") * (col("__n") - col("__p"))))
           .as("auc"))
   }
-
-  /** MultiEvaluator (E9): mean per-group AUC over groups with both
-    * classes, after joining a group-id table on uid. */
-  def meanGroupedAuc(scored: DataFrame, groupIds: DataFrame, uid: String,
-                     group: String, score: String, label: String): Double =
-    groupedAuc(scored.join(groupIds, uid), group, score, label)
-      .agg(avg("auc")).first().getDouble(0)
 
   /** Precision@k per group then mean (E8). */
   def meanPrecisionAtK(df: DataFrame, group: String, score: String,

@@ -22,8 +22,6 @@ class GpModel(kernel: Kernel, x: DenseMatrix[Double], yMean: Double,
     val varPrior = kernel.cov(xm, xm)(0, 0)
     (mean, math.max(1e-12, varPrior - (v dot v)))
   }
-
-  def kernelUsed: Kernel = kernel
 }
 
 /** GP estimator: kernel hyperparameters (amplitude, noise, length scale)
@@ -89,10 +87,4 @@ object Acquisition {
       val z = (best - mean) / sigma
       (best - mean) * GpMath.stdNormCdf(z) + sigma * GpMath.stdNormPdf(z)
     }
-  }
-
-  /** Lower confidence bound (to MINIMIZE): μ − κσ. */
-  def lowerConfidenceBound(kappa: Double = 2.0)
-                          (mean: Double, variance: Double): Double =
-    -(mean - kappa * math.sqrt(variance)) // negated: callers maximize acq
-}
+  }}

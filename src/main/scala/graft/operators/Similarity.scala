@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{AggFunctions, VectorOps => V}
+import graft.util.Parallel
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -1304,39 +1305,6 @@ object Similarity {
     }
   }
 
-  /** Execute EVERY action of a fleet plan ([[indexMaintenancePlan]]'s
-    * output over any mix of families) in one call — the last step of
-    * the fleet loop: health union → plan → THIS. Each row's family is
-    * sniffed from its manifest snapshot's on-disk tables (postings →
-    * IVF, codes → IVF-PQ, bands → MinHash, sigs → SimHash, labels →
-    * SemDeDup state, shingles → decontam) and the action dispatches to
-    * that family's apply operator. Actions that need an input only the
-    * operator can supply take it from `corpora` keyed by index dir —
-    * text tables (canonical `id`/`text` columns) for the text-family
-    * `dedup_prepass`, the embedding store (`id`/`v`) for a PQ rebuild.
-    *
-    * Per-row failure isolation: a row whose action cannot run unattended
-    * (a PQ rebuild with no embedding store, a SemDeDup `rebuild` with
-    * no k policy, a text-family `dedup_prepass` with no corpus) is
-    * REPORTED, not thrown: fleet maintenance over a thousand indexes
-    * must not abort on the one row that needs an operator. With
-    * `runbookDir`, the persisted [[FleetRunbook]] answers for every
-    * dir `corpora` omits — vectors/text from its side-input path, a
-    * SemDeDup k from its `target_cluster_size` policy — so the
-    * unattended loop executes those rows instead of skipping them
-    * (q263). Returns the report: one row per plan row,
-    * (dir, family, action, status, detail) with status `executed` /
-    * `skipped` / `failed`. Driver-side loop over a bounded plan (the
-    * fleet table is one row per index by construction); each executed
-    * action is itself a distributed job under that index's writer
-    * lock — which is why `parallelism > 1` is safe and what a
-    * thousand-index fleet wants: the units touch disjoint lock
-    * domains, so N compactions overlap their scheduling floors. Rows
-    * naming the SAME dir run sequentially inside one unit (they share
-    * a lock domain — racing them would fabricate `failed` rows), and
-    * report order is preserved either way; `timeout` bounds the
-    * parallel wait per [[fleetMap]] (overruns report `failed`, never
-    * discard the fleet's report). */
   /** Sniff which index family lives at a manifest snapshot from its
     * on-disk tables — the shared dispatch key of every fleet verb
     * ([[fleetHealth]], [[fleetMaintenanceApply]], [[fleetDelete]],
@@ -1522,48 +1490,39 @@ object Similarity {
     else Seq.empty[(String, Long)].toDF("dir", "sweep")
   }
 
-  /** Map a fleet's per-index units onto `parallelism` driver threads,
-    * preserving input order in the output. Each unit drives ONE index
-    * dir under that index's own writer lock, so units never contend on
-    * state — exactly the property that makes fleet maintenance over a
-    * thousand indexes embarrassingly parallel. parallelism = 1 (the
-    * default everywhere) is plain sequential execution (no timeout —
-    * every unit runs to completion on the caller's thread).
+  /** Execute EVERY action of a fleet plan ([[indexMaintenancePlan]]'s
+    * output over any mix of families) in one call — the last step of
+    * the fleet loop: health union → plan → THIS. Each row's family is
+    * sniffed from its manifest snapshot's on-disk tables (postings →
+    * IVF, codes → IVF-PQ, bands → MinHash, sigs → SimHash, labels →
+    * SemDeDup state, shingles → decontam) and the action dispatches to
+    * that family's apply operator. Actions that need an input only the
+    * operator can supply take it from `corpora` keyed by index dir —
+    * text tables (canonical `id`/`text` columns) for the text-family
+    * `dedup_prepass`, the embedding store (`id`/`v`) for a PQ rebuild.
     *
-    * `timeout` bounds the PARALLEL wait without discarding per-row
-    * isolation: units still unfinished when it expires are reported
-    * through `onTimeout` (the caller turns them into `failed` rows)
-    * while every completed unit keeps its real result — a fleet whose
-    * one legitimately-long compaction overruns no longer throws away
-    * the whole report. A timed-out unit's thread keeps running in the
-    * background until it finishes (pool.shutdown() does not interrupt
-    * it); its index stays writer-locked until then, which the report
-    * row says. Default Duration.Inf: an unattended fleet loop waits. */
-  private def fleetMap[A, B](units: Seq[A], parallelism: Int,
-                             timeout: scala.concurrent.duration.Duration =
-                               scala.concurrent.duration.Duration.Inf)
-                            (f: A => B)(onTimeout: A => B): Seq[B] =
-    if (parallelism <= 1 || units.size <= 1) units.map(f)
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(parallelism, units.size))
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutorService(pool)
-      val futs = units.map(u => Future(f(u)))
-      try {
-        try Await.ready(Future.sequence(futs), timeout)
-        catch { case _: java.util.concurrent.TimeoutException => () }
-        units.zip(futs).map { case (u, fu) =>
-          fu.value match {
-            case Some(scala.util.Success(b)) => b
-            case Some(scala.util.Failure(e)) => throw e
-            case None => onTimeout(u)
-          }
-        }
-      } finally pool.shutdown()
-    }
-
+    * Per-row failure isolation: a row whose action cannot run unattended
+    * (a PQ rebuild with no embedding store, a SemDeDup `rebuild` with
+    * no k policy, a text-family `dedup_prepass` with no corpus) is
+    * REPORTED, not thrown: fleet maintenance over a thousand indexes
+    * must not abort on the one row that needs an operator. With
+    * `runbookDir`, the persisted [[FleetRunbook]] answers for every
+    * dir `corpora` omits — vectors/text from its side-input path, a
+    * SemDeDup k from its `target_cluster_size` policy — so the
+    * unattended loop executes those rows instead of skipping them
+    * (q263). Returns the report: one row per plan row,
+    * (dir, family, action, status, detail) with status `executed` /
+    * `skipped` / `failed`. Driver-side loop over a bounded plan (the
+    * fleet table is one row per index by construction); each executed
+    * action is itself a distributed job under that index's writer
+    * lock — which is why `parallelism > 1` is safe and what a
+    * thousand-index fleet wants: the units touch disjoint lock
+    * domains, so N compactions overlap their scheduling floors. Rows
+    * naming the SAME dir run sequentially inside one unit (they share
+    * a lock domain — racing them would fabricate `failed` rows), and
+    * report order is preserved either way; `timeout` bounds the
+    * parallel wait per [[Parallel.fleetMap]] (overruns report
+    * `failed`, never discard the fleet's report). */
   def fleetMaintenanceApply(spark: org.apache.spark.sql.SparkSession,
                             plan: DataFrame,
                             corpora: Map[String, DataFrame] = Map.empty,
@@ -1669,15 +1628,15 @@ object Similarity {
     val dirOrder = rows.map(_._1).distinct
     val byDir = indexed.groupBy(_._1._1)
     val units = dirOrder.map(byDir)
-    val report = fleetMap(units, parallelism, timeout) { unit =>
+    val report = Parallel.fleetMap(units, parallelism, timeout,
+      onTimeout = (unit: Seq[((String, String), Int)]) =>
+        unit.map { case ((dir, action), i) =>
+          (i, (dir, "unknown", action, "failed",
+            s"timed out after $timeout — the unit may still be running " +
+              "in the background; its index stays writer-locked until " +
+              "it finishes"))
+        }) { unit =>
       unit.map { case ((dir, action), i) => (i, applyOne(dir, action)) }
-    } { unit =>
-      unit.map { case ((dir, action), i) =>
-        (i, (dir, "unknown", action, "failed",
-          s"timed out after $timeout — the unit may still be running " +
-            "in the background; its index stays writer-locked until " +
-            "it finishes"))
-      }
     }
     report.flatten.sortBy(_._1).map(_._2)
       .toDF("dir", "family", "action", "status", "detail")
@@ -1813,15 +1772,15 @@ object Similarity {
     val dirOrder = dirs.distinct
     val byDir = indexed.groupBy(_._1)
     val units = dirOrder.map(byDir)
-    val report = fleetMap(units, parallelism, timeout) { unit =>
+    val report = Parallel.fleetMap(units, parallelism, timeout,
+      onTimeout = (unit: Seq[(String, Int)]) =>
+        unit.map { case (dir, i) =>
+          (i, (dir, "unknown", "failed",
+            s"timed out after $timeout — the unit may still be running " +
+              "in the background; its index stays writer-locked until " +
+              "it finishes"))
+        }) { unit =>
       unit.map { case (dir, i) => (i, deleteOne(dir)) }
-    } { unit =>
-      unit.map { case (dir, i) =>
-        (i, (dir, "unknown", "failed",
-          s"timed out after $timeout — the unit may still be running " +
-            "in the background; its index stays writer-locked until " +
-            "it finishes"))
-      }
     }
     report.flatten.sortBy(_._1).map(_._2)
       .toDF("dir", "family", "status", "detail")
@@ -1870,12 +1829,13 @@ object Similarity {
           0L, 0L, 0L, -1L)
       }
     }
-    fleetMap(dirs.distinct, parallelism, timeout)(cloneOne) { dir =>
-      (dir, s"$dstRoot/${base(dir)}", "unknown", "failed",
-        s"timed out after $timeout — the copy may still be running in " +
-          "the background; its clone target stays writer-locked until " +
-          "it finishes", 0L, 0L, 0L, -1L)
-    }.toDF("src", "dst", "family", "status", "detail", "tables",
+    Parallel.fleetMap(dirs.distinct, parallelism, timeout,
+      onTimeout = (dir: String) =>
+        (dir, s"$dstRoot/${base(dir)}", "unknown", "failed",
+          s"timed out after $timeout — the copy may still be running " +
+            "in the background; its clone target stays writer-locked " +
+            "until it finishes", 0L, 0L, 0L, -1L))(cloneOne)
+      .toDF("src", "dst", "family", "status", "detail", "tables",
       "files", "bytes", "src_version")
   }
 

@@ -22,6 +22,9 @@ object ExecProfile {
 
   private val SpKey = "spark.sql.shuffle.partitions"
   private val AqeKey = "spark.sql.adaptive.enabled"
+  private val WscKey = "spark.sql.codegen.wholeStage"
+  private val CgfKey = "spark.sql.codegen.factoryMode"
+  private val AbtKey = "spark.sql.autoBroadcastJoinThreshold"
 
   /** The width the scope would run at: `min(session, rows/rpp + 1)`,
     * or None when the session width is not a plain integer (e.g.
@@ -34,15 +37,10 @@ object ExecProfile {
       .map(sp => math.min(sp.toLong,
         rows / math.max(1L, rowsPerPartition) + 1L).toInt)
 
-  private val WscKey = "spark.sql.codegen.wholeStage"
-  private val CgfKey = "spark.sql.codegen.factoryMode"
-
   /** Run `body` with the derived shuffle width and AQE off when (and
     * only when) the derived width is below the session's; otherwise the
-    * body runs untouched. All confs are restored afterwards to the
-    * exact values the session observed before the scope (captured with
-    * `getOption`, never hardcoded defaults; a key `getOption` could not
-    * read is unset again).
+    * body runs untouched. The active scope is a [[withConfs]] scope, so
+    * every conf is restored exactly afterwards.
     *
     * `codegenOff = true` additionally disables whole-stage codegen
     * inside an ACTIVE scope — for loops that materialize many DISTINCT
@@ -51,12 +49,7 @@ object ExecProfile {
     * rows (measured on the GAME descent loop: 25 materializations,
     * 9.3 s compiled vs 4.0 s interpreted at sf0.1). Same scale honesty
     * as the width: at production row counts the scope never activates
-    * and codegen stays on.
-    *
-    * Session-global conf mutation: the scope must not run concurrently
-    * with other queries on the same session — all in-repo callers drive
-    * their scope sequentially from one driver thread. Callers that
-    * overlap independent jobs do so OUTSIDE any derived-shuffle scope. */
+    * and codegen stays on. */
   def withDerivedShuffle[T](spark: SparkSession, rows: Long,
                             rowsPerPartition: Long = 25000L,
                             codegenOff: Boolean = false)
@@ -69,21 +62,68 @@ object ExecProfile {
       case _ => false
     }
     if (!active) body
-    else {
-      val keys = Seq(SpKey, AqeKey) ++
-        (if (codegenOff) Seq(WscKey, CgfKey) else Nil)
-      val saved = keys.map(k => k -> spark.conf.getOption(k))
-      spark.conf.set(SpKey, derived.get.toString)
-      spark.conf.set(AqeKey, "false")
-      if (codegenOff) {
-        spark.conf.set(WscKey, "false")
-        spark.conf.set(CgfKey, "NO_CODEGEN")
-      }
-      try body
-      finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+    else withConfs(spark,
+      Seq(SpKey -> derived.get.toString, AqeKey -> "false") ++
+        (if (codegenOff) Seq(WscKey -> "false", CgfKey -> "NO_CODEGEN")
+         else Nil))(body)
+  }
+
+  /** The conf set for FIXTURE-SCALE gates: the persisted-index
+    * lifecycle gates, whose inputs are few-row planted states that stay
+    * constant-size by construction (decades flat), so their wall time
+    * is pure Spark scheduling floor. Every setting is an execution
+    * strategy; none changes a row, so the gates stay hash-identical.
+    * The data-bearing queries and the production-scale probes keep the
+    * session's settings.
+    *   - AQE off, 4 shuffle partitions: AQE turns every exchange of
+    *     every probe/health/compact plan into its own stage-job (q254
+    *     ran 295 jobs on a 4-row fixture — 60-90 ms of scheduler
+    *     latency each), buying nothing because there is no data to
+    *     re-plan around.
+    *   - whole-stage codegen off: these gates run dozens of DISTINCT
+    *     lifecycle plans over ≤ ~20-row planted states, and
+    *     janino-compiling kilobytes of whole-stage Java per plan costs
+    *     far more than interpreting the handful of rows ever saves
+    *     (q258 warm job-time sum 9-14 s with codegen vs 5.2 s
+    *     interpreted).
+    *   - auto-broadcast off: every BroadcastExchange materializes
+    *     through its OWN job, and at fixture scale a single lifecycle
+    *     action's plan carries dozens of auto-broadcast tiny sides, so
+    *     the gate's cost is ~one scheduler round-trip per broadcast
+    *     (q262: ~28 jobs per 5-doc admission batch). 4-partition
+    *     shuffle joins fold the same tiny joins into the action's one
+    *     job. Explicit broadcast() hints (load-bearing at scale) are
+    *     unaffected; join STRATEGY never changes rows. */
+  val FixtureConfs: Seq[(String, String)] = Seq(
+    AqeKey -> "false",
+    SpKey -> "4",
+    WscKey -> "false",
+    CgfKey -> "NO_CODEGEN",
+    AbtKey -> "-1")
+
+  /** Run `body` with each `key -> value` set on the session, then
+    * restore every key exactly: a key the session had set gets its
+    * value back, and a key it had NOT set is unset again (so it reads
+    * its default, not a copy of it). The prior state is read from
+    * `getAll`, the session's explicit settings — `getOption` cannot
+    * tell an unset key from one set to its default. The restore also
+    * runs when a `set` or `body` throws.
+    *
+    * Session-global conf mutation: the scope must not run concurrently
+    * with other queries on the same session. All in-repo callers open
+    * it from one driver thread; a [[Parallel.fleetMap]] section inside
+    * the scope is fine (its units join before the restore), a scope
+    * opened inside a unit is not. */
+  def withConfs[T](spark: SparkSession, confs: Seq[(String, String)])
+                  (body: => T): T = {
+    val set = spark.conf.getAll
+    val saved = confs.map { case (k, _) => k -> set.get(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 }

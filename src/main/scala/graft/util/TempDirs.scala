@@ -2,9 +2,10 @@ package graft.util
 
 import java.io.File
 
-/** Recursive delete for per-run temp state (staged streaming input,
-  * persisted-index gate directories). One implementation instead of a
-  * copy per call site. */
+/** Per-run temp state (staged streaming input, persisted-index gate
+  * directories): fresh unique paths and their recursive delete, plus
+  * the scope that pairs the two. One implementation instead of a copy
+  * per call site. */
 object TempDirs {
   def deleteRecursively(f: File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
@@ -16,4 +17,14 @@ object TempDirs {
   def fresh(prefix: String): File =
     new File(sys.props("java.io.tmpdir"),
       prefix + java.util.UUID.randomUUID().toString.replace("-", ""))
+
+  /** Run `body` over one [[fresh]] absolute path per prefix (in prefix
+    * order) and delete every one of them afterwards, also when `body`
+    * throws. Results that outlive the scope must be materialized inside
+    * it (collect or localCheckpoint), since their files are gone after. */
+  def scoped[A](prefixes: String*)(body: Seq[String] => A): A = {
+    val dirs = prefixes.map(fresh)
+    try body(dirs.map(_.getAbsolutePath))
+    finally dirs.foreach(deleteRecursively)
+  }
 }

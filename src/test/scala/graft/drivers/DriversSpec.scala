@@ -87,6 +87,23 @@ class DriversSpec extends SparkSpec {
       .filter(col("selected")).count() == 1)
   }
 
+  test("an unknown --evaluator name fails in every driver before it " +
+    "reads or trains anything") {
+    def args(extra: String*) = Args.parse((Seq(
+      "--input-dir", s"$tmp/no-such-input",
+      "--output-dir", s"$tmp/bad-evaluator",
+      "--model-dir", s"$tmp/no-such-model",
+      "--uid-col", "id", "--label-col", "y", "--feature-cols", "x1,x2",
+      "--loss", "squared", "--evaluator", "rsme") ++ extra).toArray)
+    val e = intercept[IllegalArgumentException](
+      GameTrainingDriver.run(spark, args()))
+    assert(e.getMessage.contains("rsme") && e.getMessage.contains("rmse"))
+    intercept[IllegalArgumentException](LegacyDriver.run(spark, args()))
+    intercept[IllegalArgumentException](
+      GameScoringDriver.run(spark, args()))
+    assert(!new java.io.File(s"$tmp/bad-evaluator").exists())
+  }
+
   test("game scoring driver scores with the saved model and writes sink") {
     val scores = GameScoringDriver.run(spark, Args.parse(Array(
       "--input-dir", s"$tmp/validation",

@@ -36,6 +36,18 @@ class EvaluatorSpec extends SparkSpec {
       < 1e-12)
     assert(math.abs(Evaluators.squaredLoss(df, "score", "label", Some("w"))
       - 0.5) < 1e-12)
+    // the drivers' name dispatch: Σ w·(e^s − y·s), and the smoothed
+    // hinge over margins m = s·(±1): 0 at m ≥ 1, ½(1−m)² in (0, 1),
+    // ½ − m at m ≤ 0
+    assert(Evaluators.byName("rmse")(df, "score", "label", Some("w")) ==
+      Evaluators.rmse(df, "score", "label", Some("w")))
+    assert(math.abs(Evaluators.byName("poisson")(df, "score", "label",
+      Some("w")) - (math.E - 2.0 + 2.0 * (math.exp(3.0) - 9.0))) < 1e-9)
+    val hinge = Seq((0.5, 1.0), (-0.3, 1.0), (0.3, 0.0), (2.0, 1.0))
+      .toDF("score", "label")
+    assert(math.abs(Evaluators.byName("smoothed_hinge")(hinge, "score",
+      "label", None) - (0.125 + 0.8 + 0.8)) < 1e-12)
+    intercept[IllegalArgumentException](Evaluators.byName("rsme"))
   }
 
   test("logistic loss evaluator matches pointwise loss") {

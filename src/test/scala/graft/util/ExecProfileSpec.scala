@@ -2,8 +2,9 @@ package graft.util
 
 import graft.SparkSpec
 
-/** The input-size-derived shuffle-width scope: activation boundary,
-  * conf restoration, and graceful no-op on non-integer session widths. */
+/** The session-conf scopes: the input-size-derived shuffle width
+  * (activation boundary, graceful no-op on non-integer session widths)
+  * and the exact restore every scope shares. */
 class ExecProfileSpec extends SparkSpec {
 
   private val SpKey = "spark.sql.shuffle.partitions"
@@ -40,16 +41,38 @@ class ExecProfileSpec extends SparkSpec {
   test("withDerivedShuffle restores confs when the body throws, and " +
     "codegenOff rides the active scope") {
     val spBefore = spark.conf.get(SpKey)
-    intercept[RuntimeException] {
-      ExecProfile.withDerivedShuffle(spark, 10L, 25000L,
-        codegenOff = true) {
-        assert(spark.conf.get("spark.sql.codegen.wholeStage") == "false")
-        throw new RuntimeException("boom")
+    // the derived scope, and the fixture conf set through withConfs
+    // directly: both switch codegen off, and both restore on a throw
+    val scopes = Seq[(() => Unit) => Unit](
+      body => ExecProfile.withDerivedShuffle(spark, 10L, 25000L,
+        codegenOff = true)(body()),
+      body => ExecProfile.withConfs(spark, ExecProfile.FixtureConfs)(body()))
+    scopes.foreach { scope =>
+      intercept[RuntimeException] {
+        scope { () =>
+          assert(spark.conf.get("spark.sql.codegen.wholeStage") == "false")
+          throw new RuntimeException("boom")
+        }
       }
+      assert(spark.conf.get(SpKey) == spBefore)
+      assert(spark.conf.getOption("spark.sql.codegen.wholeStage")
+        .forall(_ != "false"))
     }
-    assert(spark.conf.get(SpKey) == spBefore)
-    assert(spark.conf.getOption("spark.sql.codegen.wholeStage")
-      .forall(_ != "false"))
+  }
+
+  test("a fixture gate leaves each of its five confs as it found them, " +
+    "an unset key unset") {
+    val abt = "spark.sql.autoBroadcastJoinThreshold"
+    val keys = Seq(AqeKey, SpKey, "spark.sql.codegen.wholeStage",
+      "spark.sql.codegen.factoryMode", abt)
+    spark.conf.unset(abt)
+    def state() = keys.map(k =>
+      (k, spark.conf.getOption(k), spark.conf.getAll.contains(k)))
+    val before = state()
+    assert(before.exists { case (k, _, set) => k == abt && !set })
+    graft.SparkEntry.queries("q258_fleet_delete")(spark, sf("sf0.001"))
+      .collect()
+    assert(state() == before)
   }
 
   // NOTE: the non-integer-width fallback (derivedWidth -> None, scope
